@@ -27,12 +27,12 @@ from ..session import configure_runtime
 from .catalog import query
 
 
-#: events.parquet schema per (path, mtime_ns, size) — every streaming
-#: query re-derived it with a fresh batch-reader footer read (a driver
-#: round trip per query × 12 streaming queries per catalog pass); one
-#: footer read per distinct file state suffices, and the stat-based
-#: key revalidates a regenerated fixture at the same path for free.
-_EVENT_SCHEMA_CACHE: dict[tuple, "object"] = {}
+#: events.parquet path -> ((mtime_ns, size), schema) — every streaming
+#: query re-derived the schema with a fresh batch-reader footer read (a
+#: driver round trip per query × 12 streaming queries per catalog pass);
+#: one footer read per file state suffices. Keyed by path so a
+#: regenerated fixture replaces its entry instead of adding one.
+_EVENT_SCHEMA_CACHE: dict[str, tuple[tuple[int, int], "object"]] = {}
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,19 +40,21 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch path (ns → µs floor, sources/registry.py)."""
     configure_runtime(spark)
     path = f"{sf_dir}/events.parquet"
-    # Cache key carries (mtime_ns, size) so a regenerated fixture at
-    # the same path revalidates with one os.stat instead of serving a
-    # stale schema (ADVICE r12); a missing file falls through to the
-    # reader for its native error.
+    # The entry carries (mtime_ns, size) so a regenerated fixture at the
+    # same path revalidates with one os.stat instead of serving a stale
+    # schema (ADVICE r12). A failed stat is never cached: a missing file
+    # falls through to the reader for its native error, and a read that
+    # races with the file's creation is not pinned.
     try:
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
+        stat_key = (st.st_mtime_ns, st.st_size)
     except OSError:
-        key = (path, -1, -1)
-    schema = _EVENT_SCHEMA_CACHE.get(key)
-    if schema is None:
+        stat_key = None
+    cached_key, schema = _EVENT_SCHEMA_CACHE.get(path, (None, None))
+    if stat_key is None or cached_key != stat_key:
         schema = spark.read.parquet(path).schema
-        _EVENT_SCHEMA_CACHE[key] = schema
+        if stat_key is not None:
+            _EVENT_SCHEMA_CACHE[path] = (stat_key, schema)
     # File stream sources take a DIRECTORY; select just the events file
     # out of the sf_dir with a glob filter.
     stream = (

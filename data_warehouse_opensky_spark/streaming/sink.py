@@ -40,9 +40,11 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from ..operators.asof import latest_per_key
 
 #: Subdirectory of the sink root holding the current merged snapshot.
 CURRENT = "current"
@@ -67,14 +69,7 @@ def _merge_latest(
         if target is None
         else target.withColumn("_src", F.lit(0)).unionByName(batch)
     )
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.desc(order_col), F.desc("_src")
-    )
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
+    return latest_per_key(merged, key_cols, [order_col, "_src"]).drop("_src")
 
 
 def _load_num_buckets(sink_dir: str, requested: int) -> int:

@@ -33,22 +33,12 @@ from .export import export_clean_csv, write_staging_jdbc
 
 
 def discover_new_files(spark: SparkSession, landing_dir: str, file_log: FileLog) -> list[str]:
-    """T1.4 + T1.5: glob the landing zone, anti-join the ledger,
-    register survivors as NEW, return their paths."""
-    names = [
-        f
-        for f in sorted(os.listdir(landing_dir))
-        if f.startswith("states_") and f.endswith(".csv")
-    ]
-    if not names:
-        return []
-    names_df = spark.createDataFrame([(n,) for n in names], ["file_name"])
-    file_log.register_new(names_df)
-    new = {
-        r.file_name
-        for r in file_log.current().filter(F.col("status") == "NEW").collect()
-    }
-    return [f"{landing_dir}/{n}" for n in names if n in new]
+    """T1.4 + T1.5: glob the landing zone, register unseen files as NEW
+    in the ledger, return the paths of every file still NEW."""
+    names = sorted(
+        f for f in os.listdir(landing_dir) if f.startswith("states_") and f.endswith(".csv")
+    )
+    return [f"{landing_dir}/{n}" for n in file_log.register_new(names)]
 
 
 def stage_files(

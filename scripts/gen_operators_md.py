@@ -29,9 +29,11 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
     ("T1.4", "Directory scan + glob filter",
      "`warehouse/etl.py::discover_new_files`; streaming twin `streaming/ingest.py::stream_landing_source`"),
     ("T1.5", "Incremental-set anti-join",
-     "`warehouse/etl.py::discover_new_files` (left-anti on FileLog); subsumed by stream checkpoint"),
+     "`warehouse/etl.py::discover_new_files` (set difference against one `FileLog.current()` "
+     "read, inside `register_new`); subsumed by stream checkpoint"),
     ("T1.6", "Idempotent keyed insert",
-     "`warehouse/control.py::FileLog.register_new` (dropDuplicates + left-anti); test_ingest idempotency"),
+     "`warehouse/control.py::FileLog.register_new` (one `current()` read, one driver-side "
+     "append of the unseen names); test_ingest idempotency, tests/test_control.py"),
     ("T1.7", "Keyed UPDATE",
      "`warehouse/control.py::FileLog.record` / `JobLog.end` (event-log + latest-wins + `compact()`); data-plane MERGE INTO: "
      "`warehouse/versioned.py::VersionedParquetTable.merge_into` / `overwrite_partitions` (copy-on-write versions, atomic pointer flip, "

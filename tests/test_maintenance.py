@@ -338,20 +338,22 @@ def test_job_log_compact_preserves_current(spark, tmp_path):
     assert statuses[id3] == "COMPLETED"
 
 
-def test_file_log_auto_compaction_bounds_directory(spark, tmp_path):
+def test_file_log_auto_compaction_bounds_directory(spark, tmp_path, monkeypatch):
     """VERDICT r11 #6: the cadence rule must actually fire. A long
     synthetic run of status writes with a small threshold keeps the
     directory listing bounded (compaction folds it back to one row
     per key) and never changes `current()`."""
     import os
 
+    from data_warehouse_opensky_spark.warehouse import control
     from data_warehouse_opensky_spark.warehouse.control import FileLog
 
+    monkeypatch.setattr(control, "COMPACT_AFTER_FILES", 20)
     log = FileLog(spark, str(tmp_path / "file_log"))
     max_seen = 0
     for i in range(30):
         log.record(f"f{i % 5}.csv", "PROCESSING")
-        log.maybe_compact(threshold=20)
+        log.maybe_compact()
         max_seen = max(
             max_seen,
             sum(1 for f in os.listdir(log.path) if not f.startswith("_")),
@@ -362,4 +364,5 @@ def test_file_log_auto_compaction_bounds_directory(spark, tmp_path):
     cur = {r.file_name for r in log.current().collect()}
     assert cur == {f"f{i}.csv" for i in range(5)}
     # below threshold the hook is a no-op (no Spark job, 0 removed)
-    assert log.maybe_compact(threshold=10_000) == 0
+    monkeypatch.setattr(control, "COMPACT_AFTER_FILES", 10_000)
+    assert log.maybe_compact() == 0

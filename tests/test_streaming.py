@@ -709,3 +709,31 @@ def test_stateful_agg_under_rocksdb_provider(spark, tmp_path):
             )
     assert got == want
     assert any(m["stateOperators"] for m in metrics), metrics
+
+
+def test_event_schema_cache_replaces_entry_when_file_is_regenerated(spark, tmp_path):
+    """ADVICE r13: the events.parquet schema cache holds one entry per
+    path. Regenerating the file replaces that entry with the new
+    schema, and a failed stat caches nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_opensky_spark.plans import streaming_queries as sq
+
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([1_700_000_000_000_000], pa.timestamp("us", tz="UTC"))
+    pq.write_table(pa.table({"user_id": [1], "ts": ts}), path)
+    n_before = len(sq._EVENT_SCHEMA_CACHE)
+    sq._stream_events(spark, str(tmp_path))
+    pq.write_table(pa.table({"user_id": [1], "ts": ts, "price": [2.5]}), path)
+    stream = sq._stream_events(spark, str(tmp_path))
+    assert len(sq._EVENT_SCHEMA_CACHE) == n_before + 1
+    assert "price" in sq._EVENT_SCHEMA_CACHE[path][1].fieldNames()
+    assert "price" in stream.columns
+
+    from pyspark.errors import AnalysisException
+
+    missing = tmp_path / "missing"
+    with pytest.raises(AnalysisException):
+        sq._stream_events(spark, str(missing))
+    assert f"{missing}/events.parquet" not in sq._EVENT_SCHEMA_CACHE
