@@ -6,17 +6,15 @@ path — higher-order functions `transform`/`aggregate`/`zip_with` keep
 everything in Tungsten):
 
 * exact        — hash groupBy on content (or normalized content)
-* MinHash LSH  — shingle → K salted-md5 minhashes → b bands → bucket
-                 join on band signature → candidate pairs
+* MinHash LSH  — shingle → K salted-md5 minhashes → b bands → one
+                 bucket shuffle on band signature → candidate pairs
 * SimHash      — 32-bit sign-aggregated token hashes + hamming pairs
-* n-gram Jaccard — inverted-index join on shingles (NOT a cross join):
-                 |A∩B| from the index, |A∪B| = |A|+|B|−|A∩B|
+* n-gram Jaccard — exact verify of candidate pairs by row-local
+                 array_intersect: |A∪B| = |A|+|B|−|A∩B|
 
-Scale notes: the shingle inverted index is the classic web-dedup plan —
-shuffle is O(total shingles), hot shingles are the skew risk (drop
-shingles with document-frequency above a cap, as MapReduce-era dedup
-pipelines do; exposed as `max_shingle_df`). MinHash bands reduce the
-pair space from O(n²) to colliding buckets only.
+Scale notes: each document's shingle set stays in one row, so
+signatures need no shuffle; MinHash bands reduce the pair space from
+O(n²) to colliding buckets only.
 
 Determinism: hashes are md5-derived (first 8 hex chars → bigint), so
 any SQL engine reproduces them exactly — no engine-specific hash().
@@ -61,8 +59,7 @@ def shingle_array(text_col: str = "text", n: int = 3) -> F.Column:
     one row: shingling, hashing, and minhash signatures then need NO
     explode and NO shuffle at all (embarrassingly parallel over docs),
     which is the right 100 TB shape whenever a document's shingle set
-    fits in a row (true up to multi-MB docs). The exploded
-    `shingle_index` below remains the fallback for outsized docs.
+    fits in a row (true up to multi-MB docs).
     """
     # NOTE: substring(text, i, n) per position measured 12× FASTER than
     # the split-once-then-slice form — Catalyst inlines a split() that
@@ -108,250 +105,6 @@ def minhash_signatures_arrays(
         for k in range(num_hashes)
     ]
     return d.select("doc_id", "sh", F.size("sh").alias("n_sh"), *mins)
-
-
-def shingle_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_shingle_df: int | None = None,
-    distinct: bool = True,
-) -> DataFrame:
-    """(id, shingle) inverted index over char n-grams.
-
-    `distinct=False` skips the per-doc array_distinct for consumers
-    where duplicates are harmless (minhash: min over duplicates = min
-    over distinct) — array_distinct is O(k²) per row.
-    """
-    # NOTE: substring(text, i, n) per position measured 12× FASTER than
-    # the split-once-then-slice form — Catalyst inlines a split() that
-    # appears inside the transform lambda and re-evaluates it per
-    # element (O(chars²) splits). Keep the direct substring form.
-    grams = F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
-        f" i -> substring({text_col}, i, {n}))"
-    )
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(grams) if distinct else grams).alias("shingle"),
-    )
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    return sh
-
-
-def jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df_frac: float | None = None,
-) -> DataFrame:
-    """Near-dup pairs by n-gram Jaccard via inverted-index join.
-
-    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b and
-    jaccard rounded to 6 dp (continuous ratio — rounding-safe).
-
-    `max_df_frac` drops shingles present in more than that fraction of
-    the corpus BEFORE the join — the standard web-dedup guard: the
-    intersection join is Σ_shingle df², so one ubiquitous shingle turns
-    it into an O(n²) cross product. Jaccard is then computed over the
-    filtered shingle sets (documented semantics change; true near-dups
-    share plenty of rare shingles, so recall is unaffected in practice).
-    """
-    sh = shingle_index(docs, id_col, text_col, n)
-    if max_df_frac is not None:
-        n_docs = docs.select(F.count("*").alias("__n_docs"))
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .crossJoin(F.broadcast(n_docs))
-            .filter(F.col("df") > F.col("__n_docs") * max_df_frac)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def jaccard_verify_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    threshold: float = 0.25,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard computed ONLY on candidate pairs.
-
-    The 100 TB shape: LSH (minhash bands) proposes candidates, this
-    verifies them exactly — join cost is O(|candidates| × shingles/doc)
-    instead of the Σ df² inverted-index blowup of all-pairs Jaccard
-    (degenerate when the corpus shares a small shingle vocabulary).
-    `candidates` needs columns (doc_a, doc_b). Pass `shingles` (a
-    pre-built — ideally persisted — shingle index) when the caller
-    also derived `candidates` from it: the index feeds FOUR subtrees
-    here (hash, sizes, both intersection sides) and Spark recomputes
-    unpersisted diamond branches (measured 2.5× on the full
-    candidates+verify pipeline).
-    """
-    sh = shingles if shingles is not None else shingle_index(
-        docs, id_col, text_col, n
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        candidates.select("doc_a", "doc_b")
-        .join(
-            sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def minhash_signatures_wide(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 6,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, m0..m{K-1}): K minhashes as ONE map-side-combined agg.
-
-    One md5 per distinct shingle; the K hash variants are the salted
-    linear family (MINHASH_PRIME) — integer arithmetic inside codegen,
-    no row explosion. Shuffle = partially-aggregated (doc_id → K mins)
-    rows only. `shingles` lets the caller share a persisted index
-    (duplicate shingles in it are harmless: min over dups == min).
-    """
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_index(docs, id_col, text_col, n, distinct=False)
-    )
-    hb = sh.select("doc_id", md5_hash64(F.col("shingle")).alias("h"))
-    return hb.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(salted_hash_sql(k))).alias(f"m{k}")
-            for k in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 6,
-) -> DataFrame:
-    """(doc_id, k, minhash): long form of `minhash_signatures_wide`."""
-    wide = minhash_signatures_wide(docs, id_col, text_col, n, num_hashes)
-    stack = ", ".join(f"CAST({k} AS BIGINT), m{k}" for k in range(num_hashes))
-    return wide.select(
-        "doc_id", F.expr(f"stack({num_hashes}, {stack}) AS (k, minhash)")
-    )
-
-
-def minhash_band_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 6,
-    rows_per_band: int = 1,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """LSH candidate pairs: docs sharing any band signature.
-
-    Returns (doc_a, doc_b, n_shared_bands), doc_a < doc_b. Band
-    signature = the band's minhash values joined with ',' — bucket-join
-    on (band, signature) is the LSH step that avoids the O(n²) pair
-    space. Bands come straight off the wide signature row (no second
-    shuffle to assemble signatures).
-    """
-    num_bands = num_hashes // rows_per_band
-    wide = minhash_signatures_wide(docs, id_col, text_col, n, num_hashes, shingles)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"m{k}").cast("string")
-                    for k in range(b * rows_per_band, (b + 1) * rows_per_band)
-                ],
-            ).alias("band_sig"),
-        )
-        for b in range(num_bands)
-    ]
-    sig = wide.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_sig")
-    a = sig.alias("a")
-    b = sig.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
 
 
 def band_signatures(

@@ -110,11 +110,6 @@ def decode_image_meta_pil(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_col, "payload").mapInPandas(run, MEDIA_META_SCHEMA)
 
 
-def _fake_dims(n_bytes: int) -> tuple[int, int, int]:
-    """Deterministic fake decode: dims derived from payload length."""
-    return (n_bytes * 7) % 640 + 16, (n_bytes * 13) % 480 + 16, 3
-
-
 def decode_image_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """mapInPandas: binary payload → typed image metadata (Arrow batches)."""
 

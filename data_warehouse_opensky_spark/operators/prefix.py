@@ -34,7 +34,7 @@ nondeterministically.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -173,16 +173,6 @@ def distributed_running_max_exclusive(
         local.join(F.broadcast(off_df), "_pid")
         .withColumn(out_col, F.greatest("_local", "_offset"))
         .drop("_pid", "_local", "_offset")
-    )
-
-
-def running_total_column(
-    df: DataFrame, order_cols: list[str], value_col: str
-) -> Column:
-    """Single-partition window running sum — ONLY for pre-aggregated
-    series (≤ ~1e6 rows); larger series must use distributed_cumsum."""
-    return F.sum(value_col).over(
-        Window.orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, 0)
     )
 
 

@@ -133,12 +133,3 @@ def session_window_stats(
             "max_altitude",
         )
     )
-
-
-def streaming_dedup(clean: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Exactly-once per (aircraft, contact instant) within the
-    watermark horizon — the streaming form of T1.6's keyed dedup."""
-    src = clean
-    if clean.isStreaming:
-        src = clean.withWatermark("last_contact", watermark)
-    return src.dropDuplicates(["icao24", "last_contact"])

@@ -4,12 +4,14 @@ and the diagram's missing stages 4–6).
 The reference's sequential per-file/per-chunk loops (load_warehouse.py
 :145,:196 — its scalability ceiling, SURVEY §3 EP2) become Spark
 partitioned scans; its two sinks (raw Postgres append + clean CSV)
-become bronze/silver parquet writes. Per-file fault isolation (T1.22)
+become a bronze archive of the landing file and a silver parquet
+write. Per-file fault isolation (T1.22)
 is preserved: one bad file logs FAILED and the loop continues.
 
 Scale design (the 100 TB layout):
-* bronze: raw strings + lineage cols, partitioned by ingest date —
-  append-only, never rewritten.
+* bronze: the landing CSV itself, hard-linked on the driver into
+  `ingest_date=<UTC date>/` — raw, append-only, never rewritten, and
+  no Spark job or second parse of the file.
 * silver: typed clean table partitioned by event date
   (`last_contact`), the column every time-windowed query prunes on.
 * gold marts: pre-aggregated cubes rebuilt per load (tiny relative to
@@ -19,6 +21,7 @@ Scale design (the 100 TB layout):
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -30,9 +33,10 @@ from ..sources.config import DbConfig
 from ..transform import clean_state_vectors
 from .control import FileLog
 from .export import export_clean_csv, write_staging_jdbc
+from .versioned import link_or_copy
 
 
-def discover_new_files(spark: SparkSession, landing_dir: str, file_log: FileLog) -> list[str]:
+def discover_new_files(landing_dir: str, file_log: FileLog) -> list[str]:
     """T1.4 + T1.5: glob the landing zone, register unseen files as NEW
     in the ledger, return the paths of every file still NEW."""
     names = sorted(
@@ -52,27 +56,31 @@ def stage_files(
 ) -> dict[str, str]:
     """EP2 core loop with per-file fault isolation (T1.22).
 
-    Returns {file_name: final_status}. Each file: raw read (explicit
-    schema, no inference) → bronze append → §1.3 clean transform →
-    silver append partitioned by event date. Optional reference-
-    contract sinks: `clean_csv_dir` emits DataStaging-style
-    clean_<name>.csv per file (T1.18), `jdbc` appends the raw frame to
-    a relational staging table (T1.17) — see warehouse/export.py."""
+    Returns {file_name: final_status}. Each file: hard link into
+    `bronze_dir/ingest_date=<UTC date>/` (byte copy across
+    filesystems; no Spark job) → one raw read (explicit schema, no
+    inference) → §1.3 clean transform → silver append partitioned by
+    event date. Optional reference-contract sinks: `clean_csv_dir`
+    emits DataStaging-style clean_<name>.csv per file (T1.18), `jdbc`
+    appends the raw frame plus `file_source`/`load_timestamp` to a
+    relational staging table (T1.17) — see warehouse/export.py."""
     configure_runtime(spark)
     results: dict[str, str] = {}
     for path in paths:
         name = os.path.basename(path)
         file_log.record(name, "PROCESSING")
         try:
+            bronze = f"{bronze_dir}/ingest_date={datetime.now(timezone.utc).date()}"
+            os.makedirs(bronze, exist_ok=True)
+            link_or_copy(path, f"{bronze}/{name}")
             raw = spark.read.csv(path, header=True, schema=RAW_SCHEMA)
-            bronze = raw.withColumn("file_source", F.lit(name)).withColumn(
-                "load_timestamp", F.current_timestamp()
-            )
-            bronze.withColumn(
-                "ingest_date", F.to_date("load_timestamp")
-            ).write.mode("append").partitionBy("ingest_date").parquet(bronze_dir)
             if jdbc is not None:
-                write_staging_jdbc(bronze, jdbc)
+                write_staging_jdbc(
+                    raw.withColumn("file_source", F.lit(name)).withColumn(
+                        "load_timestamp", F.current_timestamp()
+                    ),
+                    jdbc,
+                )
 
             clean = clean_state_vectors(raw, file_source=F.lit(name))
             if clean_csv_dir is not None:
@@ -176,7 +184,7 @@ def run_incremental_load(
 ) -> dict[str, str]:
     """EP2 end-to-end: discover → stage → (idempotent on re-run)."""
     file_log = FileLog(spark, f"{warehouse_dir}/control/file_log")
-    new_paths = discover_new_files(spark, landing_dir, file_log)
+    new_paths = discover_new_files(landing_dir, file_log)
     return stage_files(
         spark,
         new_paths,

@@ -1,7 +1,8 @@
 """Reference-contract export sinks (T1.17 JDBC staging, T1.18 clean CSV).
 
-The repo's warehouse truth lives in bronze/silver/gold parquet
-(warehouse/etl.py) — the scale-correct layout. These two sinks exist
+The repo's warehouse truth lives in the bronze archive of landing
+files and silver/gold parquet (warehouse/etl.py) — the scale-correct
+layout. These two sinks exist
 for consumers of the REFERENCE's contracts:
 
 * `export_clean_csv` — the `DataStaging/clean_<name>.csv` header-once
@@ -15,7 +16,7 @@ for consumers of the REFERENCE's contracts:
   (`chunk.to_sql('raw_flight_states', …, if_exists='append')`,
   load_warehouse.py:151). Spark-side this is one `df.write.jdbc`
   append; partition-parallel inserts replace the reference's
-  sequential chunk loop. Optional — parquet staging remains the
+  sequential chunk loop. Optional — the bronze archive remains the
   default; no JDBC driver jar ships with this repo.
 """
 

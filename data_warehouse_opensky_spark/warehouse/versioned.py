@@ -59,6 +59,27 @@ from pyspark.sql import functions as F
 _LATEST = "_LATEST"
 _SCHEMA = "_SCHEMA"
 
+
+def link_or_copy(src: str, dst: str) -> None:
+    """Hard-link `src` to `dst`. Where the link fails (another
+    filesystem, no hard-link support) copy to a dot-prefixed temp file
+    and rename it into place, so `dst` is never seen partial. An
+    existing `dst` is left as it is."""
+    if os.path.lexists(dst):
+        return
+    try:
+        os.link(src, dst)
+    except OSError:
+        head, name = os.path.split(dst)
+        tmp = os.path.join(head, f".{name}.{os.getpid()}.tmp")
+        try:
+            shutil.copy2(src, tmp)
+            os.replace(tmp, dst)
+        finally:
+            if os.path.lexists(tmp):
+                os.remove(tmp)
+
+
 #: Spark writes NULL (and empty-string) partition values to this
 #: directory name and reads it back as NULL — same constant as Hive's
 #: default partition (ExternalCatalogUtils.DEFAULT_PARTITION_NAME).
@@ -234,18 +255,13 @@ class VersionedParquetTable:
 
     @staticmethod
     def _link_tree(src: str, dst: str) -> None:
-        """Hard-link every file of src into dst (copy-on-write reuse;
-        falls back to copy across filesystems)."""
+        """Hard-link every file of src into dst (copy-on-write reuse)."""
         for root, _dirs, files in os.walk(src):
             rel = os.path.relpath(root, src)
             out = os.path.join(dst, rel) if rel != "." else dst
             os.makedirs(out, exist_ok=True)
             for fn in files:
-                s, d = os.path.join(root, fn), os.path.join(out, fn)
-                try:
-                    os.link(s, d)
-                except OSError:
-                    shutil.copy2(s, d)
+                link_or_copy(os.path.join(root, fn), os.path.join(out, fn))
 
     def merge_into(
         self,

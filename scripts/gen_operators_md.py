@@ -53,7 +53,9 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
     ("T1.16", "Projection + reorder + NULL back-fill",
      "`transform.py::clean_state_vectors` (CLEAN_SCHEMA order); `projection_pruning`"),
     ("T1.17", "Append sink (staging)",
-     "`warehouse/etl.py::stage_files` → bronze parquet append"),
+     "`warehouse/etl.py::stage_files` → bronze: the landing CSV hard-linked (byte copy across "
+     "filesystems) into `ingest_date=<UTC date>/`, raw and append-only; optional JDBC raw "
+     "append `warehouse/export.py::write_staging_jdbc`"),
     ("T1.18", "CSV append sink, header-once",
      "`warehouse/etl.py::stage_files` clean-zone per-file overwrite write"),
     ("T1.19", "Row count aggregate", "`FileLog.record(row_count=…)`; `count_distinct_users`"),

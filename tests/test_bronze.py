@@ -1,0 +1,101 @@
+"""Bronze archive (warehouse/etl.py::stage_files): each staged landing
+file is hard-linked, as it came in, into
+`bronze/state_vectors/ingest_date=<UTC date>/`, on the driver and
+without a Spark job; where the link fails the file is copied in whole."""
+
+from __future__ import annotations
+
+import errno
+import glob
+import os
+from datetime import datetime, timezone
+
+from data_warehouse_opensky_spark.warehouse.control import FileLog
+from data_warehouse_opensky_spark.warehouse.etl import run_incremental_load, stage_files
+
+from .test_control import HEADER, job_group
+
+
+def _utc_today() -> str:
+    return datetime.now(timezone.utc).date().isoformat()
+
+
+def _landing_file(landing, minute: int, n_rows: int = 3) -> str:
+    """One headered crawl CSV of `n_rows` distinct aircraft."""
+    os.makedirs(landing, exist_ok=True)
+    name = f"states_job_20251113_09{minute:02d}00.csv"
+    rows = "".join(
+        f"{minute:02x}{i:04x},CALL{i:03d} ,Nowhere,1700000000,{1700000010 + i},"
+        f"1.0,2.0,3.0,false,4.0,5.0,6.0,,7.0,1000,false,0\n"
+        for i in range(n_rows)
+    )
+    path = os.path.join(landing, name)
+    with open(path, "w") as f:
+        f.write(HEADER + rows)
+    return path
+
+
+def _bronze_entries(wh: str, name: str) -> list[str]:
+    return glob.glob(f"{wh}/bronze/state_vectors/ingest_date=*/{name}")
+
+
+def test_bronze_is_the_landing_file_and_restaging_keeps_one_entry(spark, tmp_path):
+    landing, wh = str(tmp_path / "landing"), str(tmp_path / "warehouse")
+    path = _landing_file(landing, 0)
+    name = os.path.basename(path)
+    before = _utc_today()
+
+    assert run_incremental_load(spark, landing, wh) == {name: "CLEAN_EXPORTED"}
+
+    [entry] = _bronze_entries(wh, name)
+    date = os.path.basename(os.path.dirname(entry)).removeprefix("ingest_date=")
+    assert date in {before, _utc_today()}
+    assert open(entry, "rb").read() == open(path, "rb").read()
+    assert os.path.samefile(entry, path)
+
+    file_log = FileLog(spark, f"{wh}/control/file_log")
+    again = stage_files(
+        spark, [path], f"{wh}/bronze/state_vectors", f"{wh}/silver/state_vectors", file_log
+    )
+    assert again == {name: "CLEAN_EXPORTED"}
+    assert _bronze_entries(wh, name) == [entry]
+    assert os.listdir(os.path.dirname(entry)) == [name]
+
+
+def test_stage_files_runs_one_spark_job_per_file(spark, tmp_path):
+    landing, wh = str(tmp_path / "landing"), str(tmp_path / "warehouse")
+    paths = [_landing_file(landing, m) for m in (0, 10, 20)]
+    file_log = FileLog(spark, f"{wh}/control/file_log")
+
+    with job_group(spark, "stage-files-jobs") as jobs:
+        res = stage_files(
+            spark,
+            paths,
+            f"{wh}/bronze/state_vectors",
+            f"{wh}/silver/state_vectors",
+            file_log,
+        )
+        assert set(res.values()) == {"CLEAN_EXPORTED"}
+        assert len(jobs()) == len(paths)
+
+
+def test_bronze_falls_back_to_a_whole_copy_when_links_fail(spark, tmp_path, monkeypatch):
+    landing, wh = str(tmp_path / "landing"), str(tmp_path / "warehouse")
+    path = _landing_file(landing, 30)
+    name = os.path.basename(path)
+
+    def cross_device(src, dst, *args, **kwargs):
+        raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), src, None, dst)
+
+    monkeypatch.setattr(os, "link", cross_device)
+    assert run_incremental_load(spark, landing, wh) == {name: "CLEAN_EXPORTED"}
+
+    [entry] = _bronze_entries(wh, name)
+    assert open(entry, "rb").read() == open(path, "rb").read()
+    assert not os.path.samefile(entry, path)
+    assert os.listdir(os.path.dirname(entry)) == [name]
+    status = {
+        r.file_name: r.status
+        for r in FileLog(spark, f"{wh}/control/file_log").current().collect()
+    }
+    assert status == {name: "CLEAN_EXPORTED"}
