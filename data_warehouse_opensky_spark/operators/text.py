@@ -1098,7 +1098,7 @@ def cdc_chunks(
     """
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("_text"),
             F.explode(F.expr(chunks)).alias("_c"),
         )

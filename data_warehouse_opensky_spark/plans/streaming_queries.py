@@ -501,14 +501,14 @@ def streaming_hopping_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "streaming_upsert_sink_snapshot",
     tier="T2",
-    doc="The partition-scoped upsert SINK under the gate end-to-end "
-    "(T1.6/T1.7/T2.16): stream events through foreachBatch into a "
-    "bucket-partitioned parquet target (latest-wins per user on the "
-    "exact epoch-s·1e7+event_id version; streaming/sink.py merges and "
-    "atomically swaps ONLY touched buckets), then read the snapshot "
-    "back. The returned frame is the MERGED TARGET, not a memory "
-    "sink — a green row proves write path, bucket layout, merge rule "
-    "and swap all compose to batch latest-per-key semantics.",
+    doc="The upsert SINK under the gate end-to-end (T1.6/T1.7/T2.16): "
+    "stream events through foreachBatch into a flat parquet target "
+    "(latest-wins per user on the exact epoch-s·1e7+event_id version; "
+    "streaming/sink.py merges the stale snapshot with each micro-batch, "
+    "appends the result and deletes the stale files), then read the "
+    "snapshot back. The returned frame is the MERGED TARGET, not a "
+    "memory sink — a green row proves write path, merge rule and "
+    "append-then-delete all compose to batch latest-per-key semantics.",
     oracle="""
     SELECT user_id,
            max_by(CAST(round(value * 10000) AS BIGINT),
@@ -558,9 +558,7 @@ def streaming_upsert_sink_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("upsert-sink drain did not finish within 300 s")
-    snap = spark.read.option("basePath", os.path.join(root, CURRENT)).parquet(
-        os.path.join(root, CURRENT)
-    )
+    snap = spark.read.parquet(os.path.join(root, CURRENT))
     batch_counts = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .groupBy("user_id")

@@ -774,3 +774,8 @@ def test_cdc_chunks_arrow_equals_hof_twin(spark):
     assert hof == arw
     assert len(hof) > 10  # the fixture actually produced chunks
     assert not any(r[0] == 0 for r in hof)  # empty doc emits none
+
+    # Both twins widen a narrower id column to bigint doc_id (column
+    # names and types agree; only chunk_idx nullability differs).
+    int_docs = docs.withColumn("doc_id", docs["doc_id"].cast("int"))
+    assert cdc_chunks(int_docs).dtypes == cdc_chunks_arrow(int_docs).dtypes
