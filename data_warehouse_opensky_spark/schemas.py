@@ -70,6 +70,14 @@ CLEAN_SCHEMA = T.StructType(
     ]
 )
 
+#: The silver table as `stage_files` and `stream_clean_to_silver` write
+#: it: the clean contract plus the `event_date` partition column
+#: (UTC date of `last_contact`, else `load_timestamp`). Readers pass it
+#: to skip a schema-inference job.
+SILVER_SCHEMA = T.StructType(
+    CLEAN_SCHEMA.fields + [T.StructField("event_date", T.DateType())]
+)
+
 #: load_warehouse.py:63-66 — the seven coerce-to-double telemetry columns.
 NUMERIC_COLS: tuple[str, ...] = (
     "longitude",

@@ -2,11 +2,14 @@
 and the diagram's missing stages 4–6).
 
 The reference's sequential per-file/per-chunk loops (load_warehouse.py
-:145,:196 — its scalability ceiling, SURVEY §3 EP2) become Spark
-partitioned scans; its two sinks (raw Postgres append + clean CSV)
+:145,:196 — its scalability ceiling, SURVEY §3 EP2) become one Spark
+write per tick: every file of the tick is cleaned and appended to
+silver together. Its two sinks (raw Postgres append + clean CSV)
 become a bronze archive of the landing file and a silver parquet
-write. Per-file fault isolation (T1.22)
-is preserved: one bad file logs FAILED and the loop continues.
+write. Per-file fault isolation (T1.22) is preserved: when the batched
+write fails, the files are staged one by one, so one bad file logs
+FAILED and the others still land. The gold marts' independent chains
+are written concurrently.
 
 Scale design (the 100 TB layout):
 * bronze: the landing CSV itself, hard-linked on the driver into
@@ -21,13 +24,16 @@ Scale design (the 100 TB layout):
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
+from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import latest_per_key
-from ..schemas import RAW_SCHEMA
+from ..schemas import RAW_SCHEMA, SILVER_SCHEMA
 from ..session import configure_runtime
 from ..sources.config import DbConfig
 from ..transform import clean_state_vectors
@@ -54,18 +60,37 @@ def stage_files(
     clean_csv_dir: str | None = None,
     jdbc: "DbConfig | None" = None,
 ) -> dict[str, str]:
-    """EP2 core loop with per-file fault isolation (T1.22).
+    """EP2 staging of one tick's files with per-file fault isolation
+    (T1.22). Returns {file_name: final_status}.
 
-    Returns {file_name: final_status}. Each file: hard link into
+    Each file is recorded PROCESSING and hard-linked into
     `bronze_dir/ingest_date=<UTC date>/` (byte copy across
-    filesystems; no Spark job) → one raw read (explicit schema, no
-    inference) → §1.3 clean transform → silver append partitioned by
-    event date. Optional reference-contract sinks: `clean_csv_dir`
+    filesystems; no Spark job); a link failure marks only that file
+    FAILED. Every linked file is then staged by one `_stage_together`
+    call: one raw read per file (explicit schema, no inference), one
+    §1.3 clean transform and ONE silver append for the whole tick,
+    partitioned by event date, with each file's row count observed on
+    that write. Optional reference-contract sinks: `clean_csv_dir`
     emits DataStaging-style clean_<name>.csv per file (T1.18), `jdbc`
-    appends the raw frame plus `file_source`/`load_timestamp` to a
-    relational staging table (T1.17) — see warehouse/export.py."""
+    appends the raw rows plus `file_source`/`load_timestamp` to a
+    relational staging table in one write (T1.17) — see
+    warehouse/export.py.
+
+    If the batched write raises, the same helper runs once per file, so
+    a bad file ends FAILED and the others still land (T1.22). Two
+    failure windows are wider than a per-file loop's: a kill between
+    the silver append and the CLEAN_EXPORTED records leaves every file
+    of the tick in PROCESSING, and a batch that fails inside its commit
+    after some output moved can have those rows appended again by the
+    per-file fallback."""
     configure_runtime(spark)
     results: dict[str, str] = {}
+
+    def failed(name: str, ex: Exception) -> None:
+        file_log.record(name, "FAILED", error_message=str(ex))
+        results[name] = "FAILED"
+
+    linked: list[str] = []
     for path in paths:
         name = os.path.basename(path)
         file_log.record(name, "PROCESSING")
@@ -73,38 +98,68 @@ def stage_files(
             bronze = f"{bronze_dir}/ingest_date={datetime.now(timezone.utc).date()}"
             os.makedirs(bronze, exist_ok=True)
             link_or_copy(path, f"{bronze}/{name}")
-            raw = spark.read.csv(path, header=True, schema=RAW_SCHEMA)
-            if jdbc is not None:
-                write_staging_jdbc(
-                    raw.withColumn("file_source", F.lit(name)).withColumn(
-                        "load_timestamp", F.current_timestamp()
-                    ),
-                    jdbc,
-                )
-
-            clean = clean_state_vectors(raw, file_source=F.lit(name))
-            if clean_csv_dir is not None:
-                export_clean_csv(clean, clean_csv_dir, name)
-            # Row count rides along the write via observe() — one scan
-            # per file, not a count() pass plus a write pass (the
-            # double-compute doubles ETL cost at 100× file counts).
-            obs = Observation(f"stage:{name}")
-            clean.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
-                "event_date", F.to_date(F.coalesce("last_contact", "load_timestamp"))
-            ).write.mode("append").partitionBy("event_date").parquet(silver_dir)
-            n = obs.get["n"]
-
-            file_log.record(name, "CLEAN_EXPORTED", row_count=n)
-            results[name] = "CLEAN_EXPORTED"
+            linked.append(path)
         except Exception as ex:  # noqa: BLE001 — per-file isolation is the contract
-            file_log.record(name, "FAILED", error_message=str(ex))
-            results[name] = "FAILED"
+            failed(name, ex)
+
+    counts: dict[str, int] = {}
+    if linked:
+        try:
+            counts = _stage_together(spark, linked, silver_dir, clean_csv_dir, jdbc)
+        except Exception:  # noqa: BLE001 — retry file by file to isolate the bad one
+            for path in linked:
+                try:
+                    counts |= _stage_together(spark, [path], silver_dir, clean_csv_dir, jdbc)
+                except Exception as ex:  # noqa: BLE001
+                    failed(os.path.basename(path), ex)
+    for name, n in counts.items():
+        file_log.record(name, "CLEAN_EXPORTED", row_count=n)
+        results[name] = "CLEAN_EXPORTED"
     # Auto-compaction cadence (VERDICT r11 #6 / SCALE.md §42): after
     # the batch's status writes, fold the event log back to one row
     # per file once its directory listing crosses the threshold —
     # keeps control-table listing O(keys) over unbounded cron runs.
     file_log.maybe_compact()
     return results
+
+
+def _stage_together(
+    spark: SparkSession,
+    paths: list[str],
+    silver_dir: str,
+    clean_csv_dir: str | None,
+    jdbc: "DbConfig | None",
+) -> dict[str, int]:
+    """Clean `paths` and append them to silver in one write; return
+    {file_name: rows}. `file_source` is the literal file name, not
+    `input_file_name()`, which Spark URL-encodes."""
+    names = [os.path.basename(p) for p in paths]
+    raw = reduce(
+        DataFrame.union,
+        (
+            spark.read.csv(p, header=True, schema=RAW_SCHEMA).withColumn(
+                "file_source", F.lit(n)
+            )
+            for p, n in zip(paths, names)
+        ),
+    )
+    if jdbc is not None:
+        write_staging_jdbc(raw.withColumn("load_timestamp", F.current_timestamp()), jdbc)
+
+    clean = clean_state_vectors(raw, file_source=F.col("file_source"))
+    if clean_csv_dir is not None:
+        for n in names:
+            export_clean_csv(clean.filter(F.col("file_source") == n), clean_csv_dir, n)
+    # Per-file row counts ride along the write via observe() — one scan
+    # of the tick, not a count() pass plus a write pass.
+    obs = Observation("stage")
+    clean.observe(
+        obs, *[F.count_if(F.col("file_source") == n).alias(str(i)) for i, n in enumerate(names)]
+    ).withColumn(
+        "event_date", F.to_date(F.coalesce("last_contact", "load_timestamp"))
+    ).write.mode("append").partitionBy("event_date").parquet(silver_dir)
+    counts = obs.get
+    return {n: counts[str(i)] for i, n in enumerate(names)}
 
 
 def _state_vector_rules() -> list[tuple[str, "F.Column"]]:
@@ -201,11 +256,16 @@ def build_gold_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dic
     latest_positions   — T2.5 current state per aircraft
     country_toplists   — T2.10 fastest aircraft per country
     trajectory_deltas  — T2.9 lag deltas per aircraft
-    """
-    s = spark.read.parquet(silver_dir)
-    out: dict[str, int] = {}
 
-    def write_mart(df: DataFrame, name: str) -> None:
+    Silver is read with `SILVER_SCHEMA`, so no schema-inference job
+    runs. The three independent chains (the cube; latest_positions then
+    the toplists read back from it; the deltas) write concurrently on
+    three threads that inherit the caller's job group and tags. An
+    exception from any chain propagates once all three have stopped.
+    """
+    s = spark.read.schema(SILVER_SCHEMA).parquet(silver_dir)
+
+    def write_mart(df: DataFrame, name: str) -> int:
         # Mart row counts ride along the write via observe() — each
         # cube/window computes exactly once (a trailing .count() on the
         # unwritten plan would re-run the whole aggregation).
@@ -213,7 +273,7 @@ def build_gold_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dic
         df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"
         ).parquet(f"{gold_dir}/{name}")
-        out[name] = obs.get["n"]
+        return obs.get["n"]
 
     cube = (
         s.withColumn("hour", F.date_trunc("hour", "last_contact"))
@@ -225,22 +285,9 @@ def build_gold_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dic
             F.avg("baro_altitude").alias("avg_baro_altitude"),
         )
     )
-    write_mart(cube, "country_hour_cube")
-
     latest = latest_per_key(
         s, "icao24", ["last_contact", "time_position", "file_source"]
     )
-    write_mart(latest, "latest_positions")
-    latest = spark.read.parquet(f"{gold_dir}/latest_positions")
-
-    w = Window.partitionBy("origin_country").orderBy(F.desc_nulls_last("velocity"))
-    top = (
-        latest.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("origin_country", "rank", "icao24", "callsign", "velocity")
-    )
-    write_mart(top, "country_toplists")
-
     tw = Window.partitionBy("icao24").orderBy("last_contact", "file_source")
     deltas = s.select(
         "icao24",
@@ -254,32 +301,30 @@ def build_gold_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dic
             - F.lag(F.unix_timestamp("last_contact")).over(tw)
         ).alias("gap_s"),
     )
-    write_mart(deltas, "trajectory_deltas")
+
+    def latest_then_toplists() -> dict[str, int]:
+        n_latest = write_mart(latest, "latest_positions")
+        # Toplists rank the written mart, so the two cannot disagree on a tie.
+        written = spark.read.schema(SILVER_SCHEMA).parquet(f"{gold_dir}/latest_positions")
+        w = Window.partitionBy("origin_country").orderBy(F.desc_nulls_last("velocity"))
+        top = (
+            written.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 5)
+            .select("origin_country", "rank", "icao24", "callsign", "velocity")
+        )
+        n_top = write_mart(top, "country_toplists")
+        return {"latest_positions": n_latest, "country_toplists": n_top}
+
+    chains = [
+        lambda: {"country_hour_cube": write_mart(cube, "country_hour_cube")},
+        latest_then_toplists,
+        lambda: {"trajectory_deltas": write_mart(deltas, "trajectory_deltas")},
+    ]
+    # One inheritable_thread_target(spark) per task: each copies the
+    # caller's local properties, and Spark sets per-query ones on them.
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in chains]
+    out: dict[str, int] = {}
+    for f in futures:
+        out |= f.result()
     return out
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    path: str,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write a table bucketed (and optionally sorted) on its join key.
-
-    The 100 TB co-location primitive: two tables bucketed on the same
-    key with the same bucket count join WITHOUT any shuffle — each task
-    zips bucket i with bucket i (tests/test_plans.py pins the no-
-    Exchange plan). This is how repeated fact↔fact joins (e.g.
-    state-vectors ↔ per-aircraft dims rebuilt hourly) amortize their
-    shuffle: pay one bucketed write, skip the exchange on every later
-    join. Sorting within buckets additionally drops the per-join sort
-    for sort-merge.
-    """
-    w = df.write.mode("overwrite").option("path", path).bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)

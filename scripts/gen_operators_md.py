@@ -62,7 +62,8 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
     ("T1.20", "Audit-log append w/ generated key", "`warehouse/control.py::JobLog.start` (uuid)"),
     ("T1.21", "String truncation", "`JobLog.end` (left(msg,500)); query `string_funcs`"),
     ("T1.22", "Per-file fault isolation",
-     "`warehouse/etl.py::run_incremental_load` (FAILED row + continue); row-level twin "
+     "`warehouse/etl.py::stage_files` (one silver write per tick; if it fails, per-file "
+     "retry: FAILED row + continue); row-level twin "
      "`quarantine_split` (violation-tagged rejects frame); tests/test_ingest.py"),
     ("T1.23", "Transaction commit/rollback",
      "atomic parquet dir commit per write (each reference txn wraps one statement)"),

@@ -62,7 +62,7 @@ def test_bronze_is_the_landing_file_and_restaging_keeps_one_entry(spark, tmp_pat
     assert os.listdir(os.path.dirname(entry)) == [name]
 
 
-def test_stage_files_runs_one_spark_job_per_file(spark, tmp_path):
+def test_stage_files_runs_one_spark_job_per_call(spark, tmp_path):
     landing, wh = str(tmp_path / "landing"), str(tmp_path / "warehouse")
     paths = [_landing_file(landing, m) for m in (0, 10, 20)]
     file_log = FileLog(spark, f"{wh}/control/file_log")
@@ -76,7 +76,31 @@ def test_stage_files_runs_one_spark_job_per_file(spark, tmp_path):
             file_log,
         )
         assert set(res.values()) == {"CLEAN_EXPORTED"}
-        assert len(jobs()) == len(paths)
+        assert len(jobs()) == 1
+
+
+def test_stage_files_keeps_exact_file_names_in_one_batch(spark, tmp_path):
+    """A batch tags each file with its own name: Spark URL-encodes
+    `input_file_name()`, which would turn `a b%2+c` into `a%20b%252+c`."""
+    landing, wh = tmp_path / "landing", str(tmp_path / "warehouse")
+    landing.mkdir()
+    row = "abcdef,CALL1   ,Nowhere,1700000000,{},1.0,2.0,3.0,false,4.0,5.0,6.0,,7.0,1000,false,0\n"
+    sizes = {"states_a b%2+c.csv": 3, "states_plain.csv": 2}
+    paths = []
+    for name, n in sizes.items():
+        (landing / name).write_text(HEADER + "".join(row.format(1700000010 + i) for i in range(n)))
+        paths.append(str(landing / name))
+    file_log = FileLog(spark, f"{wh}/control/file_log")
+
+    res = stage_files(
+        spark, paths, f"{wh}/bronze/state_vectors", f"{wh}/silver/state_vectors", file_log
+    )
+
+    assert res == {name: "CLEAN_EXPORTED" for name in sizes}
+    silver = spark.read.parquet(f"{wh}/silver/state_vectors")
+    per_file = silver.groupBy("file_source").count().collect()
+    assert {r.file_source: r["count"] for r in per_file} == sizes
+    assert {r.file_name: r.row_count for r in file_log.current().collect()} == sizes
 
 
 def test_bronze_falls_back_to_a_whole_copy_when_links_fail(spark, tmp_path, monkeypatch):

@@ -119,6 +119,40 @@ def test_per_file_fault_isolation(spark, tmp_path):
     assert set(res) == {good.name, poison.name}
 
 
+def test_batch_failure_falls_back_to_per_file_isolation(spark, tmp_path):
+    """T1.22 when the tick's one staging write fails: a line of 30,000
+    commas exceeds univocity's 20,480 maxColumns even in PERMISSIVE
+    mode, so the batch fails; the per-file retry fails only that file
+    and lands the others exactly once."""
+    from data_warehouse_opensky_spark.warehouse.control import FileLog
+
+    from .test_control import HEADER
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    row = (
+        "abc12{},CALL123 ,Nowhere,1700000000,1700000010,1.0,2.0,3.0,false,"
+        "4.0,5.0,6.0,,7.0,1000,false,0\n"
+    )
+    names = {i: f"states_job_20251113_09{i}000.csv" for i in (1, 2, 3)}
+    (landing / names[1]).write_text(HEADER + row.format(1))
+    (landing / names[2]).write_text(HEADER + "," * 30_000 + "\n")
+    (landing / names[3]).write_text(HEADER + row.format(3) + row.format(4))
+
+    wh = str(tmp_path / "warehouse")
+    run_incremental_load(spark, str(landing), wh)
+
+    log = {r.file_name: r for r in FileLog(spark, f"{wh}/control/file_log").current().collect()}
+    assert {i: log[n].status for i, n in names.items()} == {
+        1: "CLEAN_EXPORTED", 2: "FAILED", 3: "CLEAN_EXPORTED"
+    }
+    assert log[names[2]].error_message
+    silver = spark.read.parquet(f"{wh}/silver/state_vectors")
+    assert sorted((r.file_source, r.icao24) for r in silver.collect()) == [
+        (names[1], "abc121"), (names[3], "abc123"), (names[3], "abc124")
+    ]
+
+
 def test_row_level_quarantine_split(spark):
     """Row-level quarantine (the per-ROW complement of T1.22's per-file
     isolation): contract-violating rows split out with the violated
@@ -156,7 +190,8 @@ def test_row_level_quarantine_split(spark):
     assert ref_good.count() == ref.count()
 
 
-def test_gold_marts(spark, tmp_path):
+def _two_crawl_silver(spark, tmp_path) -> str:
+    """Stage PAYLOAD_1 then PAYLOAD_2; return the warehouse dir."""
     landing = str(tmp_path / "landing")
     wh = str(tmp_path / "warehouse")
     cfg = JobConfig(
@@ -168,12 +203,59 @@ def test_gold_marts(spark, tmp_path):
     extract_job(spark, cfg, fake_fetcher_for(PAYLOAD_2),
                 now=datetime(2025, 11, 13, 9, 10, 0, tzinfo=timezone.utc))
     run_incremental_load(spark, landing, wh)
+    return wh
+
+
+def test_gold_marts(spark, tmp_path):
+    wh = _two_crawl_silver(spark, tmp_path)
     out = build_gold_marts(spark, f"{wh}/silver/state_vectors", f"{wh}/gold")
     assert out["latest_positions"] == 2  # 2 aircraft, latest state each
     latest = spark.read.parquet(f"{wh}/gold/latest_positions")
     dlh = latest.filter(F.col("icao24") == "3c4b31").first()
     assert dlh.velocity == 251.0  # the second crawl's (newer) state won
     assert out["trajectory_deltas"] == 3
+
+
+def test_gold_marts_concurrent_chains(spark, tmp_path, monkeypatch):
+    """The mart chains run on worker threads: their jobs stay in the
+    caller's job group, repeated builds agree, and a failure raises."""
+    from data_warehouse_opensky_spark.schemas import SILVER_SCHEMA
+    from data_warehouse_opensky_spark.warehouse import etl
+
+    from .test_control import job_group
+
+    wh = _two_crawl_silver(spark, tmp_path)
+    silver = f"{wh}/silver/state_vectors"
+    assert [(f.name, f.dataType) for f in spark.read.parquet(silver).schema] == [
+        (f.name, f.dataType) for f in SILVER_SCHEMA
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    with job_group(spark, "gold-marts-jobs") as jobs:
+        first = build_gold_marts(spark, silver, f"{wh}/gold_a")
+        assert len(jobs()) >= len(first) == 4
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+    second = build_gold_marts(spark, silver, f"{wh}/gold_b")
+    assert list(second) == list(first) and second == first
+    for mart in first:
+        a = spark.read.parquet(f"{wh}/gold_a/{mart}")
+        b = spark.read.parquet(f"{wh}/gold_b/{mart}")
+        assert a.count() == b.count() == first[mart]
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+    # A write failing inside a worker thread reaches the caller.
+    not_a_dir = tmp_path / "gold_file"
+    not_a_dir.write_text("")
+    with pytest.raises(Exception):
+        build_gold_marts(spark, silver, str(not_a_dir))
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("latest_per_key failed")
+
+    monkeypatch.setattr(etl, "latest_per_key", boom)
+    with pytest.raises(RuntimeError, match="latest_per_key failed"):
+        build_gold_marts(spark, silver, f"{wh}/gold_c")
 
 
 def test_cli_load_marts_and_sql(spark, tmp_path, capsys):

@@ -152,48 +152,6 @@ def test_partition_pruning_on_silver(spark, tmp_path):
     assert "event_date" in pf, pf
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts
-    must sort-merge join with ZERO Exchange nodes — the co-location
-    contract write_bucketed exists for (at 100 TB this is the
-    difference between a one-time bucketed write and re-shuffling the
-    fact table on every join)."""
-    import re
-
-    import pyspark.sql.functions as F
-
-    from data_warehouse_opensky_spark.warehouse.etl import write_bucketed
-
-    orders = load_table(spark, SF, "orders")
-    customer = load_table(spark, SF, "customer")
-    write_bucketed(
-        orders, "t_orders_b", ["o_custkey"], 8,
-        str(tmp_path / "orders_b"), sort_cols=["o_custkey"],
-    )
-    write_bucketed(
-        customer, "t_customer_b", ["c_custkey"], 8,
-        str(tmp_path / "customer_b"), sort_cols=["c_custkey"],
-    )
-    # Force the non-broadcast path: the point is the missing exchange
-    # on BOTH sides of a sort-merge join.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_orders_b").join(
-            spark.table("t_customer_b"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = explain_str(joined)
-        assert "SortMergeJoin" in plan, plan
-        n_exchanges = len(re.findall(r"Exchange (hash|range)partitioning", plan))
-        assert n_exchanges == 0, plan
-        # And results are sane.
-        assert joined.count() == orders.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_customer_b")
-
-
 def test_tfidf_vocab_join_strategies(spark):
     """TF-IDF's tf⨝df join: broadcast by default, shuffle join on
     `term` when spark.data_warehouse.tfidf.broadcastVocab=false (the
