@@ -11,8 +11,9 @@ EP3  sql       `... sql "SELECT ..." --sf-dir /root/testdata/sf0.01`
                training-corpus pipeline, pipeline.py)
 
 A user of the reference switches by replacing the two scripts with
-these subcommands; the job audit log (JobLog) wraps every run the way
-`job_logs` did (STARTED → COMPLETED/FAILED, T1.20/T1.22).
+these subcommands. `extract` writes the job audit log (JobLog) the way
+`job_logs` did (STARTED → COMPLETED/FAILED, T1.20/T1.22); `load` and
+`marts` write no run record yet.
 """
 
 from __future__ import annotations

@@ -35,6 +35,9 @@ RAW_COLUMNS: tuple[str, ...] = (
     "position_source",
 )
 
+#: The landing files both ingest paths read (extract_script.py:205).
+LANDING_GLOB = "states_*.csv"
+
 #: load_warehouse.py:77-85 — raw 17 + 2 derived, in this exact order.
 CLEAN_COLUMNS: tuple[str, ...] = ("load_timestamp", "file_source") + RAW_COLUMNS
 
@@ -70,10 +73,9 @@ CLEAN_SCHEMA = T.StructType(
     ]
 )
 
-#: The silver table as `stage_files` and `stream_clean_to_silver` write
-#: it: the clean contract plus the `event_date` partition column
-#: (UTC date of `last_contact`, else `load_timestamp`). Readers pass it
-#: to skip a schema-inference job.
+#: The silver table as `transform.to_silver` defines it, partitioned by
+#: `event_date` (UTC date of `last_contact`, else `load_timestamp`).
+#: Readers pass it to skip a schema-inference job.
 SILVER_SCHEMA = T.StructType(
     CLEAN_SCHEMA.fields + [T.StructField("event_date", T.DateType())]
 )

@@ -10,11 +10,14 @@ DataFrame immediately, and all downstream movement is Spark.
 
 The HTTP transport is injectable (`fetcher`) so tests run without
 network; the real transport uses urllib from the standard library.
+The token, request and decode here are the only ones: the
+`format("opensky")` DataSource (opensky_datasource.py) calls them too.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import urllib.parse
 import urllib.request
 from collections.abc import Callable
@@ -54,8 +57,12 @@ class JobConfig:
     token_url: str = ""
 
 
-def get_access_token(cfg: JobConfig, fetcher: Fetcher = _urllib_fetcher) -> str:
-    """OAuth2 client-credentials grant (extract_script.py:77-104)."""
+def get_access_token(cfg: JobConfig, fetcher: Fetcher = _urllib_fetcher) -> str | None:
+    """OAuth2 client-credentials grant (extract_script.py:77-104);
+    None, with no request, when `cfg.token_url` is empty (anonymous
+    access)."""
+    if not cfg.token_url:
+        return None
     body = urllib.parse.urlencode(
         {
             "grant_type": "client_credentials",
@@ -83,22 +90,33 @@ def fetch_states(
     return json.loads(raw)
 
 
-def states_to_dataframe(spark: SparkSession, payload: dict) -> DataFrame:
-    """Positional states array-of-arrays → typed-string DataFrame
-    (extract_script.py:191-238 semantics: missing/empty `states` → no
-    rows; every value stringified exactly as csv.writer would)."""
-    states = payload.get("states") or []
+def decode_states(payload: dict) -> list[tuple]:
+    """Positional states array-of-arrays → raw rows in `RAW_COLUMNS`
+    order (extract_script.py:191-238 semantics: missing/empty `states`
+    → no rows; missing tail columns → NULL; every value stringified
+    exactly as csv.writer would)."""
+    width = len(RAW_COLUMNS)
     rows = []
-    for s in states:
-        vals = list(s[: len(RAW_COLUMNS)]) + [None] * (len(RAW_COLUMNS) - len(s))
-        rows.append(
-            tuple(None if v is None else str(v) for v in vals)
-        )
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    for s in payload.get("states") or []:
+        vals = list(s[:width]) + [None] * (width - len(s))
+        rows.append(tuple(None if v is None else str(v) for v in vals))
+    return rows
+
+
+def states_to_dataframe(spark: SparkSession, payload: dict) -> DataFrame:
+    """One payload as a typed-string DataFrame (explicit RAW_SCHEMA)."""
+    return spark.createDataFrame(decode_states(payload), RAW_SCHEMA)
 
 
 def landing_file_name(job_name: str, now: datetime | None = None) -> str:
-    """states_{job}_{yyyymmdd_HHMMSS}.csv (extract_script.py:205)."""
+    """states_{job}_{yyyymmdd_HHMMSS}.csv (extract_script.py:205).
+
+    The job name comes from the command line, so anything but
+    `[A-Za-z0-9_-]+` raises ValueError: Spark's streaming file source
+    double-reads names with glob characters, and a `:` fails both
+    readers (streaming/ingest.py)."""
+    if not re.fullmatch(r"[A-Za-z0-9_-]+", job_name):
+        raise ValueError(f"job name must match [A-Za-z0-9_-]+, got {job_name!r}")
     now = now or datetime.now(timezone.utc)
     return f"states_{job_name}_{now.strftime('%Y%m%d_%H%M%S')}.csv"
 
@@ -133,8 +151,7 @@ def extract_job(
     Returns (path, row_count). Audit logging is the caller's concern
     (warehouse.control.log_job) — unlike the reference, ingest and
     bookkeeping are decoupled so either can be retried alone."""
-    token = get_access_token(cfg, fetcher) if cfg.token_url else None
-    payload = fetch_states(cfg, token, fetcher)
+    payload = fetch_states(cfg, get_access_token(cfg, fetcher), fetcher)
     df = states_to_dataframe(spark, payload)
     n = df.count()
     path = write_landing_csv(df, cfg.output_path, landing_file_name(cfg.job_name, now))

@@ -6,13 +6,16 @@ one-bbox-per-10-minutes cadence (extract_script.py:106-123). This
 DataSource is the scale path the reference cannot express: the bbox
 SPLITS INTO LATITUDE-STRIP TILES, one InputPartition per tile, so the
 fetch fans out across executors — N independent, smaller API reads
-instead of one giant driver-side payload. Decode semantics are
-identical to `states_to_dataframe` (positional array-of-arrays,
-missing tail columns back-filled NULL, every value stringified).
+instead of one giant driver-side payload. The token, request and
+decode are opensky_api's own (`get_access_token`, `fetch_states`,
+`decode_states`), driven by one `JobConfig` built from the options.
 
 The OAuth2 token is obtained ONCE on the driver (in `partitions()`)
-and shipped inside each partition value — executors never hold client
-credentials, only the short-lived bearer token.
+and shipped inside each partition value, next to a `JobConfig` with
+the client id, secret and token URL blanked, so the tile requests
+carry only the bearer token. The reader's options, `client_secret`
+included, are still shipped to executors: Spark pickles the reader
+with them.
 
 Streaming: `spark.readStream.format("opensky")` maps the reference's
 10-minute cron loop (extract_script.py:106-123) onto a
@@ -31,14 +34,15 @@ Deliberately NOT implemented:
   numeric order). Bbox narrowing belongs in the read options, typed.
 
 Tests inject `fake_payloads` (a JSON list of /states/all payloads, one
-per tile) so no network is touched; the real transport is stdlib
-urllib, executor-side.
+per tile) so no network is touched; the real transport is
+opensky_api's, executor-side.
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Iterator, Sequence
+from dataclasses import replace
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -47,68 +51,56 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from ..schemas import RAW_COLUMNS, RAW_SCHEMA
+from ..schemas import RAW_SCHEMA
+from .opensky_api import JobConfig, decode_states, fetch_states, get_access_token
 
 FORMAT_NAME = "opensky"
 
 
+def _job_config(options: dict) -> JobConfig:
+    """The reader options as the one request config opensky_api reads."""
+    return JobConfig(
+        job_name="datasource",
+        base_url=options.get("base_url", ""),
+        endpoint=options.get("endpoint", "/states/all"),
+        lamin=float(options.get("lamin", "-90")),
+        lomin=float(options.get("lomin", "-180")),
+        lamax=float(options.get("lamax", "90")),
+        lomax=float(options.get("lomax", "180")),
+        output_path="",
+        client_id=options.get("client_id", ""),
+        client_secret=options.get("client_secret", ""),
+        token_url=options.get("token_url", ""),
+    )
+
+
+def _fake(payloads_json: str, n: int) -> dict:
+    """Injected payload `n`; an empty poll past the end of the list."""
+    payloads = json.loads(payloads_json)
+    return payloads[n] if n < len(payloads) else {"states": []}
+
+
 class _TilePartition(InputPartition):
-    def __init__(
-        self, index: int, bbox: tuple[float, float, float, float], token: str | None
-    ):
+    def __init__(self, index: int, cfg: JobConfig, token: str | None):
         self.index = index
-        self.bbox = bbox
+        self.cfg = cfg
         self.token = token
-
-
-def _decode_states(payload: dict) -> Iterator[tuple]:
-    """Positional states decode — exact `states_to_dataframe` semantics
-    (extract_script.py:191-238): absent/empty states → no rows."""
-    for s in payload.get("states") or []:
-        vals = list(s[: len(RAW_COLUMNS)]) + [None] * (len(RAW_COLUMNS) - len(s))
-        yield tuple(None if v is None else str(v) for v in vals)
 
 
 class OpenSkyReader(DataSourceReader):
     def __init__(self, options: dict):
         self.options = options
 
-    def _bbox(self) -> tuple[float, float, float, float]:
-        o = self.options
-        return (
-            float(o.get("lamin", "-90")),
-            float(o.get("lomin", "-180")),
-            float(o.get("lamax", "90")),
-            float(o.get("lomax", "180")),
-        )
-
     def partitions(self) -> Sequence[InputPartition]:
-        lamin, lomin, lamax, lomax = self._bbox()
+        cfg = _job_config(self.options)
+        token = get_access_token(cfg)
+        tile = replace(cfg, client_id="", client_secret="", token_url="")
         tiles = max(1, int(self.options.get("tiles", "1")))
-        token = None
-        if self.options.get("token_url"):
-            from .opensky_api import JobConfig, get_access_token
-
-            token = get_access_token(
-                JobConfig(
-                    job_name="datasource",
-                    base_url=self.options.get("base_url", ""),
-                    endpoint=self.options.get("endpoint", "/states/all"),
-                    lamin=lamin,
-                    lomin=lomin,
-                    lamax=lamax,
-                    lomax=lomax,
-                    output_path="",
-                    client_id=self.options.get("client_id", ""),
-                    client_secret=self.options.get("client_secret", ""),
-                    token_url=self.options.get("token_url", ""),
-                )
-            )
-        step = (lamax - lamin) / tiles
+        step = (cfg.lamax - cfg.lamin) / tiles
         return [
             _TilePartition(
                 i,
-                (lamin + i * step, lomin, lamin + (i + 1) * step, lomax),
+                replace(tile, lamin=cfg.lamin + i * step, lamax=cfg.lamin + (i + 1) * step),
                 token,
             )
             for i in range(tiles)
@@ -117,37 +109,15 @@ class OpenSkyReader(DataSourceReader):
     def read(self, partition: _TilePartition) -> Iterator[tuple]:
         fakes = self.options.get("fake_payloads")
         if fakes is not None:
-            payloads = json.loads(fakes)
-            payload = (
-                payloads[partition.index]
-                if partition.index < len(payloads)
-                else {"states": []}
-            )
-            yield from _decode_states(payload)
-            return
-
-        import urllib.parse
-        import urllib.request
-
-        lamin, lomin, lamax, lomax = partition.bbox
-        params = urllib.parse.urlencode(
-            {"lamin": lamin, "lomin": lomin, "lamax": lamax, "lomax": lomax}
-        )
-        url = (
-            f"{self.options.get('base_url', '')}"
-            f"{self.options.get('endpoint', '/states/all')}?{params}"
-        )
-        headers = (
-            {"Authorization": f"Bearer {partition.token}"} if partition.token else {}
-        )
-        req = urllib.request.Request(url, headers=headers)
-        with urllib.request.urlopen(req, timeout=30) as resp:  # noqa: S310
-            payload = json.loads(resp.read())
-        yield from _decode_states(payload)
+            payload = _fake(fakes, partition.index)
+        else:
+            payload = fetch_states(partition.cfg, partition.token)
+        yield from decode_states(payload)
 
 
 class OpenSkyStreamReader(SimpleDataSourceStreamReader):
-    """Live-poll micro-batch reader: one /states/all poll per batch.
+    """Live-poll micro-batch reader: one /states/all poll per batch,
+    with a fresh bearer token per poll when `token_url` is set.
 
     Offset = {"poll": n} (monotone counter). With test-injected
     `fake_stream_payloads`, poll i deterministically yields payload i
@@ -166,37 +136,18 @@ class OpenSkyStreamReader(SimpleDataSourceStreamReader):
     def _payload(self, n: int) -> dict:
         fakes = self.options.get("fake_stream_payloads")
         if fakes is not None:
-            payloads = json.loads(fakes)
-            return payloads[n] if n < len(payloads) else {"states": []}
-        import urllib.parse
-        import urllib.request
-
-        params = urllib.parse.urlencode(
-            {
-                "lamin": self.options.get("lamin", "-90"),
-                "lomin": self.options.get("lomin", "-180"),
-                "lamax": self.options.get("lamax", "90"),
-                "lomax": self.options.get("lomax", "180"),
-            }
-        )
-        url = (
-            f"{self.options.get('base_url', '')}"
-            f"{self.options.get('endpoint', '/states/all')}?{params}"
-        )
-        with urllib.request.urlopen(  # noqa: S310
-            urllib.request.Request(url), timeout=30
-        ) as resp:
-            return json.loads(resp.read())
+            return _fake(fakes, n)
+        cfg = _job_config(self.options)
+        return fetch_states(cfg, get_access_token(cfg))
 
     def read(self, start: dict):
         n = start["poll"]
-        rows = list(_decode_states(self._payload(n)))
-        return rows, {"poll": n + 1}
+        return decode_states(self._payload(n)), {"poll": n + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         rows: list[tuple] = []
         for n in range(start["poll"], end["poll"]):
-            rows.extend(_decode_states(self._payload(n)))
+            rows.extend(decode_states(self._payload(n)))
         return rows
 
 

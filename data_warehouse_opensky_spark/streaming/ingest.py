@@ -14,8 +14,17 @@ Late data: `time_position`/`last_contact` (event time) lag
 let windowed state be dropped (bounded memory at 100 TB; the batch
 equivalent would re-scan everything each hour).
 
-Tests drive these with `trigger(availableNow=True)` so they run
-bounded; production uses a processing-time trigger.
+Each `stream_clean_to_silver` call is one availableNow drain, so the
+caller sets the cadence; it writes the silver rows and layout
+`stage_files` writes (`transform.to_silver`, partitioned by `event_date`).
+
+Out of scope, limits of Spark's file readers that the extractor never
+meets (`opensky_api.landing_file_name` takes only `[A-Za-z0-9_-]` jobs):
+* The streaming file source double-reads in a micro-batch holding a
+  name with glob characters: `states_a?b.csv` next to `states_aXb.csv`
+  gave aXb's rows twice, `states_[x]{y}.csv` next to `states_plain.csv`
+  gave plain's rows twice.
+* A `:` in a file name fails both the batch and the streaming reader.
 """
 
 from __future__ import annotations
@@ -24,9 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..schemas import RAW_SCHEMA
+from ..schemas import LANDING_GLOB, RAW_SCHEMA
 from ..session import configure_runtime
-from ..transform import clean_state_vectors
+from ..transform import to_silver
 
 
 def stream_landing_source(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -36,7 +45,7 @@ def stream_landing_source(spark: SparkSession, landing_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(RAW_SCHEMA)
         .option("header", True)
-        .option("pathGlobFilter", "states_*.csv")
+        .option("pathGlobFilter", LANDING_GLOB)
         .option("maxFilesPerTrigger", 16)  # bound per-micro-batch work
         .csv(landing_dir)
     )
@@ -47,25 +56,20 @@ def stream_clean_to_silver(
     landing_dir: str,
     silver_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """EP2 as a stream: landing CSVs → §1.3 clean transform → silver
-    parquet, exactly-once per file via checkpoint."""
-    raw = stream_landing_source(spark, landing_dir)
-    clean = clean_state_vectors(raw).withColumn(
-        "event_date", F.to_date(F.coalesce("last_contact", "load_timestamp"))
-    )
-    writer = (
-        clean.writeStream.format("parquet")
+    """EP2 as a stream: landing CSVs → `to_silver` → silver parquet
+    partitioned by `event_date`, exactly-once per file via checkpoint;
+    one availableNow run per call."""
+    return (
+        to_silver(stream_landing_source(spark, landing_dir))
+        .writeStream.format("parquet")
         .option("path", silver_dir)
         .option("checkpointLocation", checkpoint_dir)
+        .partitionBy("event_date")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 minutes")
-    return writer.start()
 
 
 def windowed_country_counts(

@@ -30,6 +30,15 @@ from .functions import strict_bool, try_double, try_int
 from .schemas import BOOL_COLS, CLEAN_COLUMNS, EPOCH_COLS, NUMERIC_COLS
 
 
+def source_file_name() -> Column:
+    """The name of the row's input file exactly as it is on disk ("" on
+    a frame that is not a file scan). `input_file_name()` is a
+    percent-encoded URI; `+` is protected as `%2B` first because
+    `url_decode` would read a literal `+` as a space."""
+    name = F.element_at(F.split(F.input_file_name(), "/"), -1)
+    return F.url_decode(F.regexp_replace(name, r"\+", "%2B"))
+
+
 def clean_state_vectors(
     raw: DataFrame,
     file_source: Column | None = None,
@@ -37,13 +46,13 @@ def clean_state_vectors(
 ) -> DataFrame:
     """Apply the §1.3 typed contract to an all-strings raw DataFrame.
 
-    `file_source` defaults to the basename of the input file
-    (input_file_name — the Spark-native form of load_warehouse.py:149);
-    `load_timestamp` defaults to current_timestamp() (:148). Both are
-    injectable so tests can pin deterministic values.
+    `file_source` defaults to `source_file_name()` (the Spark-native
+    form of load_warehouse.py:149); `load_timestamp` defaults to
+    current_timestamp() (:148). Both are injectable so tests can pin
+    deterministic values.
     """
     if file_source is None:
-        file_source = F.element_at(F.split(F.input_file_name(), "/"), -1)
+        file_source = source_file_name()
     if load_timestamp is None:
         load_timestamp = F.current_timestamp()
 
@@ -67,3 +76,12 @@ def clean_state_vectors(
             exprs[c] = F.col(c).cast("string")
 
     return raw.select(*[exprs[c].alias(c) for c in CLEAN_COLUMNS])
+
+
+def to_silver(raw: DataFrame) -> DataFrame:
+    """A `SILVER_SCHEMA` row per raw row, for cron and stream ingest
+    alike: the clean contract plus the `event_date` partition column
+    (UTC date of `last_contact`, else `load_timestamp`)."""
+    return clean_state_vectors(raw).withColumn(
+        "event_date", F.to_date(F.coalesce("last_contact", "load_timestamp"))
+    )

@@ -23,20 +23,21 @@ Scale design (the 100 TB layout):
 
 from __future__ import annotations
 
+import fnmatch
 import os
+import re
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
-from functools import reduce
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import latest_per_key
-from ..schemas import RAW_SCHEMA, SILVER_SCHEMA
+from ..schemas import LANDING_GLOB, RAW_SCHEMA, SILVER_SCHEMA
 from ..session import configure_runtime
 from ..sources.config import DbConfig
-from ..transform import clean_state_vectors
+from ..transform import source_file_name, to_silver
 from .control import FileLog
 from .export import export_clean_csv, write_staging_jdbc
 from .versioned import link_or_copy
@@ -45,9 +46,7 @@ from .versioned import link_or_copy
 def discover_new_files(landing_dir: str, file_log: FileLog) -> list[str]:
     """T1.4 + T1.5: glob the landing zone, register unseen files as NEW
     in the ledger, return the paths of every file still NEW."""
-    names = sorted(
-        f for f in os.listdir(landing_dir) if f.startswith("states_") and f.endswith(".csv")
-    )
+    names = sorted(f for f in os.listdir(landing_dir) if fnmatch.fnmatchcase(f, LANDING_GLOB))
     return [f"{landing_dir}/{n}" for n in file_log.register_new(names)]
 
 
@@ -67,10 +66,10 @@ def stage_files(
     `bronze_dir/ingest_date=<UTC date>/` (byte copy across
     filesystems; no Spark job); a link failure marks only that file
     FAILED. Every linked file is then staged by one `_stage_together`
-    call: one raw read per file (explicit schema, no inference), one
-    §1.3 clean transform and ONE silver append for the whole tick,
-    partitioned by event date, with each file's row count observed on
-    that write. Optional reference-contract sinks: `clean_csv_dir`
+    call: ONE raw read of the tick (explicit schema, each path read
+    literally), `transform.to_silver` and ONE silver append partitioned
+    by event date, with each file's row count observed on that write.
+    Optional reference-contract sinks: `clean_csv_dir`
     emits DataStaging-style clean_<name>.csv per file (T1.18), `jdbc`
     appends the raw rows plus `file_source`/`load_timestamp` to a
     relational staging table in one write (T1.17) — see
@@ -123,6 +122,11 @@ def stage_files(
     return results
 
 
+#: Hadoop glob metacharacters; each is backslash-escaped in a staged
+#: path so the read matches exactly that one file.
+_GLOB_CHARS = re.compile(r"([\\*?\[\]{}])")
+
+
 def _stage_together(
     spark: SparkSession,
     paths: list[str],
@@ -130,33 +134,29 @@ def _stage_together(
     clean_csv_dir: str | None,
     jdbc: "DbConfig | None",
 ) -> dict[str, int]:
-    """Clean `paths` and append them to silver in one write; return
-    {file_name: rows}. `file_source` is the literal file name, not
-    `input_file_name()`, which Spark URL-encodes."""
+    """Read `paths` in one scan, append them to silver in one write and
+    return {file_name: rows}."""
     names = [os.path.basename(p) for p in paths]
-    raw = reduce(
-        DataFrame.union,
-        (
-            spark.read.csv(p, header=True, schema=RAW_SCHEMA).withColumn(
-                "file_source", F.lit(n)
-            )
-            for p, n in zip(paths, names)
-        ),
+    raw = spark.read.csv(
+        [_GLOB_CHARS.sub(r"\\\1", p) for p in paths], header=True, schema=RAW_SCHEMA
     )
     if jdbc is not None:
-        write_staging_jdbc(raw.withColumn("load_timestamp", F.current_timestamp()), jdbc)
+        write_staging_jdbc(
+            raw.withColumns(
+                {"file_source": source_file_name(), "load_timestamp": F.current_timestamp()}
+            ),
+            jdbc,
+        )
 
-    clean = clean_state_vectors(raw, file_source=F.col("file_source"))
+    silver = to_silver(raw)
     if clean_csv_dir is not None:
         for n in names:
-            export_clean_csv(clean.filter(F.col("file_source") == n), clean_csv_dir, n)
+            export_clean_csv(silver.filter(F.col("file_source") == n), clean_csv_dir, n)
     # Per-file row counts ride along the write via observe() — one scan
     # of the tick, not a count() pass plus a write pass.
     obs = Observation("stage")
-    clean.observe(
+    silver.observe(
         obs, *[F.count_if(F.col("file_source") == n).alias(str(i)) for i, n in enumerate(names)]
-    ).withColumn(
-        "event_date", F.to_date(F.coalesce("last_contact", "load_timestamp"))
     ).write.mode("append").partitionBy("event_date").parquet(silver_dir)
     counts = obs.get
     return {n: counts[str(i)] for i, n in enumerate(names)}

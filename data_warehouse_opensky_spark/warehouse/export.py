@@ -155,9 +155,8 @@ def export_jsonl_shards(
     size or run).
 
     Layout: `out_dir/shard=K/part-*.json[.gz]`. Sharding is
-    `pmod(xxhash64(key), n_shards)` — same scheme as the upsert
-    sink's bucket layout, so downstream loaders can co-shard
-    different exports of the same key space. Within a shard, rows
+    `pmod(xxhash64(key), n_shards)`, so downstream loaders can
+    co-shard different exports of the same key space. Within a shard, rows
     are sorted by the shard key (sortWithinPartitions after a
     1-partition-per-shard repartition) so shard content is
     byte-reproducible.

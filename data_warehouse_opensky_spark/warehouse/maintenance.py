@@ -19,8 +19,8 @@ big warehouse runs instead:
   loads accrete many small files; scans then pay per-file open cost
   and lose row-group locality. Compaction rewrites a directory into
   ceil(rows / target)-sized files. At 100 TB this runs per-partition
-  (compact yesterday's directory, atomic swap) — the same
-  write-to-staging + rename discipline as streaming/sink.py.
+  (compact yesterday's directory into a staging directory, then
+  rename it into place).
 
 Only count/sum/min/max partials are stored — the exactly-mergeable
 algebra. COUNT(DISTINCT) does not merge; use sketches
@@ -116,9 +116,9 @@ def compact_directory(
 ) -> tuple[int, int]:
     """Rewrite a parquet directory into ~ceil(rows/target) files.
 
-    Returns (files_before, files_after). Write goes to a staging dir
-    then swaps in atomically (rename), so readers never see a partial
-    rewrite — same discipline as the streaming sink's bucket swap.
+    Returns (files_before, files_after). Write goes to a staging dir,
+    then two renames swap it in, so readers never see a half-written
+    file set; between the two renames the directory is briefly absent.
     The repartition count is computed from an exact count: at scale
     you'd size by bytes (`spark.sql.files.maxRecordsPerFile` /
     target file size) per partition directory instead of globally.

@@ -23,11 +23,13 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
      "bbox tiled into one InputPartition per latitude strip, executor-side fetch) "
      "— tests/test_ingest.py"),
     ("T1.2", "JSON→tabular decode",
-     "`sources/opensky_api.py::states_to_dataframe` (explicit RAW_SCHEMA)"),
+     "`sources/opensky_api.py::decode_states` (positional decode, the one shared by "
+     "`states_to_dataframe` and both `format(\"opensky\")` readers; explicit RAW_SCHEMA)"),
     ("T1.3", "CSV sink, raw zone",
      "`sources/opensky_api.py::write_landing_csv` + `landing_file_name` (timestamped)"),
     ("T1.4", "Directory scan + glob filter",
-     "`warehouse/etl.py::discover_new_files`; streaming twin `streaming/ingest.py::stream_landing_source`"),
+     "`schemas.py::LANDING_GLOB`, matched by `warehouse/etl.py::discover_new_files` and used as "
+     "the `pathGlobFilter` of the streaming twin `streaming/ingest.py::stream_landing_source`"),
     ("T1.5", "Incremental-set anti-join",
      "`warehouse/etl.py::discover_new_files` (set difference against one `FileLog.current()` "
      "read, inside `register_new`); subsumed by stream checkpoint"),
@@ -43,7 +45,9 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
     ("T1.10", "Chunked CSV scan",
      "native partitioned scan (`spark.sql.files.maxPartitionBytes`, session.py)"),
     ("T1.11", "Derived-column addition",
-     "`transform.py::clean_state_vectors` (load_timestamp/file_source); query `opensky_clean_parity`"),
+     "`transform.py::clean_state_vectors` (load_timestamp; file_source from `source_file_name`, "
+     "the file's exact on-disk name); `transform.py::to_silver` (+ event_date) for both ingest "
+     "paths; query `opensky_clean_parity`"),
     ("T1.12", "Numeric coercion cast ×7",
      "`functions/casts.py` try_cast set; query `opensky_clean_parity`; ANSI guard in tests/test_transform.py"),
     ("T1.13", "Nullable-int cast", "`functions/casts.py`; `opensky_clean_parity`"),
@@ -129,7 +133,8 @@ This file is generated: `python scripts/gen_operators_md.py`.
 """
 
 
-def main() -> None:
+def render() -> str:
+    """OPERATORS.md as generated from the catalog and the matrix."""
     rows = []
     for name in sorted(QUERIES):
         q = QUERIES[name]
@@ -149,7 +154,7 @@ def main() -> None:
     matrix = "\n".join(
         f"| {rid} | {cap} | {impl} |" for rid, cap, impl in SURVEY_MATRIX
     )
-    out = (
+    return (
         HEADER
         + "\n".join(rows)
         + "\n\n## SURVEY §2 coverage matrix\n\n"
@@ -161,11 +166,11 @@ def main() -> None:
         + matrix
         + "\n"
     )
-    Path("OPERATORS.md").write_text(out)
-    print(
-        f"wrote OPERATORS.md with {len(rows)} queries "
-        f"and {len(SURVEY_MATRIX)} matrix rows"
-    )
+
+
+def main() -> None:
+    Path("OPERATORS.md").write_text(render())
+    print(f"wrote OPERATORS.md with {len(QUERIES)} queries and {len(SURVEY_MATRIX)} matrix rows")
 
 
 if __name__ == "__main__":

@@ -103,6 +103,33 @@ def test_stage_files_keeps_exact_file_names_in_one_batch(spark, tmp_path):
     assert {r.file_name: r.row_count for r in file_log.current().collect()} == sizes
 
 
+def test_stage_files_reads_each_path_literally(spark, tmp_path):
+    """Glob characters in a file name match only that file (read as a
+    glob, `states_[x]{y}.csv` is not found and `states_a?b.csv` also
+    reads `states_aXb.csv`), and every name keeps its exact spelling."""
+    landing, wh = tmp_path / "landing", str(tmp_path / "warehouse")
+    landing.mkdir()
+    row = "abcdef,CALL1   ,Nowhere,1700000000,{},1.0,2.0,3.0,false,4.0,5.0,6.0,,7.0,1000,false,0\n"
+    sizes = {"states_[x]{y}.csv": 2, "states_a?b.csv": 1, "states_aXb.csv": 4, "states_é#x.csv": 3}
+    for name, n in sizes.items():
+        (landing / name).write_text(HEADER + "".join(row.format(1700000010 + i) for i in range(n)))
+    file_log = FileLog(spark, f"{wh}/control/file_log")
+
+    res = stage_files(
+        spark,
+        [str(landing / name) for name in sizes],
+        f"{wh}/bronze/state_vectors",
+        f"{wh}/silver/state_vectors",
+        file_log,
+    )
+
+    assert res == {name: "CLEAN_EXPORTED" for name in sizes}
+    assert {r.file_name: r.row_count for r in file_log.current().collect()} == sizes
+    silver = spark.read.parquet(f"{wh}/silver/state_vectors")
+    per_file = silver.groupBy("file_source").count().collect()
+    assert {r.file_source: r["count"] for r in per_file} == sizes
+
+
 def test_bronze_falls_back_to_a_whole_copy_when_links_fail(spark, tmp_path, monkeypatch):
     landing, wh = str(tmp_path / "landing"), str(tmp_path / "warehouse")
     path = _landing_file(landing, 30)

@@ -168,6 +168,54 @@ def test_stage_files_emits_clean_csv(spark, tmp_path):
         assert os.path.exists(f"{csv_dir}/clean_{os.path.basename(p)}")
 
 
+def test_stage_files_optional_sinks_keep_exact_names(spark, tmp_path, monkeypatch):
+    """Both optional sinks of one staged tick: one clean_<name>.csv per
+    file and one JDBC append (embedded Derby in place of Postgres) of
+    the raw 17 columns plus `file_source` and `load_timestamp`, each
+    row carrying its file's exact name."""
+    from data_warehouse_opensky_spark.warehouse import export
+    from data_warehouse_opensky_spark.warehouse.control import FileLog
+    from data_warehouse_opensky_spark.warehouse.etl import stage_files
+
+    from .test_control import HEADER
+
+    if not _derby_available(spark):
+        pytest.skip("no Derby driver on the Spark classpath")
+    opts = {
+        "url": "jdbc:derby:memory:stage_sinks;create=true",
+        "dbtable": "raw_flight_states",
+        "driver": "org.apache.derby.jdbc.EmbeddedDriver",
+    }
+    monkeypatch.setattr(export, "staging_jdbc_options", lambda db, table, batchsize: opts)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    row = "abcdef,CALL1   ,Nowhere,1700000000,{},1.0,2.0,3.0,false,4.0,5.0,6.0,,7.0,1000,false,0\n"
+    sizes = {"states_a b%2+c.csv": 3, "states_plain.csv": 2}
+    for name, n in sizes.items():
+        (landing / name).write_text(HEADER + "".join(row.format(1700000010 + i) for i in range(n)))
+    csv_dir = str(tmp_path / "DataStaging")
+
+    res = stage_files(
+        spark,
+        [str(landing / name) for name in sizes],
+        str(tmp_path / "bronze"),
+        str(tmp_path / "silver"),
+        FileLog(spark, str(tmp_path / "control")),
+        clean_csv_dir=csv_dir,
+        jdbc=DbConfig("h", "5432", "u", "p"),
+    )
+
+    assert res == {name: "CLEAN_EXPORTED" for name in sizes}
+    for name, n in sizes.items():
+        header, *rows = list(csv.reader(open(f"{csv_dir}/clean_{name}")))
+        assert header == list(CLEAN_COLUMNS)
+        assert [r[1] for r in rows] == [name] * n
+    back = spark.read.format("jdbc").options(**opts).load()
+    assert back.columns == [f.name for f in RAW_SCHEMA] + ["file_source", "load_timestamp"]
+    per_file = back.groupBy("file_source").count().collect()
+    assert {r.file_source: r["count"] for r in per_file} == sizes
+
+
 def test_export_jsonl_shards_deterministic_and_complete(spark, tmp_path):
     """JSONL export: every row lands in exactly one shard, a row's
     shard is stable across runs/partitionings, and shard files parse

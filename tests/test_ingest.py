@@ -388,3 +388,60 @@ def test_opensky_streaming_datasource_polls_and_replays(spark, tmp_path):
     got = {r.icao24 for r in spark.table(name).collect()}
     assert got == {"a1", "b2"}
     assert spark.table(name).count() == 2  # exactly once per poll
+
+
+def test_opensky_datasource_readers_send_the_bearer_token(monkeypatch):
+    """Both DataSource readers make opensky_api's requests: the stream
+    reader's poll carries `Authorization: Bearer <token>` when
+    `token_url` is set, and the batch tiles carry the driver's token
+    and no client secret."""
+    import io
+    import pickle
+    import urllib.request
+
+    from data_warehouse_opensky_spark.sources.opensky_datasource import (
+        OpenSkyReader,
+        OpenSkyStreamReader,
+    )
+
+    seen = []
+
+    def urlopen(req, timeout=None):
+        seen.append(req)
+        if req.full_url.startswith("https://auth.invalid"):
+            return io.BytesIO(json.dumps({"access_token": "tok"}).encode())
+        return io.BytesIO(json.dumps(PAYLOAD_1).encode())
+
+    monkeypatch.setattr(urllib.request, "urlopen", urlopen)
+    options = {
+        "base_url": "https://api.invalid",
+        "token_url": "https://auth.invalid/token",
+        "client_id": "me",
+        "client_secret": "s3cret",
+        "tiles": "2",
+    }
+
+    rows, offset = OpenSkyStreamReader(options).read({"poll": 0})
+    assert [r[0] for r in rows] == ["3c4b31", "4b5da1"] and offset == {"poll": 1}
+    polls = [r for r in seen if r.full_url.startswith("https://api.invalid")]
+    assert [r.get_header("Authorization") for r in polls] == ["Bearer tok"]
+
+    seen.clear()
+    reader = OpenSkyReader(options)
+    tiles = reader.partitions()
+    assert len(tiles) == 2 and len(seen) == 1  # one token request, on the driver
+    assert all(b"s3cret" not in pickle.dumps(t) for t in tiles)
+    assert len(list(reader.read(tiles[1]))) == 2
+    assert seen[-1].get_header("Authorization") == "Bearer tok"
+
+
+def test_landing_file_name_accepts_only_plain_job_names():
+    """The job name comes from `--job`; a name Spark's file readers
+    mishandle (glob characters, `:`) never reaches the landing zone."""
+    from data_warehouse_opensky_spark.sources.opensky_api import landing_file_name
+
+    now = datetime(2025, 11, 13, 9, 0, 0, tzinfo=timezone.utc)
+    assert landing_file_name("crawl_europe-2", now) == "states_crawl_europe-2_20251113_090000.csv"
+    for job in ("eu:1", "a?b", "x[1]", "a b", "../up", ""):
+        with pytest.raises(ValueError):
+            landing_file_name(job, now)

@@ -74,6 +74,30 @@ def test_stream_to_silver_exactly_once(spark, landing, tmp_path):
     assert spark.read.parquet(silver).count() == 5
 
 
+def test_stream_silver_keeps_exact_names_and_event_date_partitions(spark, tmp_path):
+    """The stream writes the silver rows and layout `stage_files`
+    writes: each file's exact name (Spark URL-encodes the input file
+    name) and `event_date=` partition directories."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    t0 = 1700000000
+    row = ("a1", "CS1     ", "Germany", t0, t0, 1.0, 2.0, 100.0, "false", 10.0,
+           0.0, 0.0, None, 110.0, "1000", "false", 0)
+    _write_crawl(landing, "states_a b%2+c.csv", [row, row])
+    _write_crawl(landing, "states_plain.csv", [row])
+    silver = str(tmp_path / "silver")
+
+    stream_clean_to_silver(spark, str(landing), silver, str(tmp_path / "ck")).awaitTermination(120)
+
+    per_file = spark.read.parquet(silver).groupBy("file_source").count().collect()
+    assert {r.file_source: r["count"] for r in per_file} == {
+        "states_a b%2+c.csv": 2, "states_plain.csv": 1
+    }
+    assert [d for d in os.listdir(silver) if d.startswith("event_date=")] == [
+        "event_date=2023-11-14"
+    ]
+
+
 def test_windowed_counts_stream_equals_batch(spark, landing, tmp_path):
     silver = str(tmp_path / "silver")
     q = stream_clean_to_silver(spark, str(landing), silver, str(tmp_path / "ck"))
