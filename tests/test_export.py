@@ -104,6 +104,10 @@ def _reference_clean_pandas(path: str, load_ts: datetime) -> pd.DataFrame:
     return df[list(CLEAN_COLUMNS)]
 
 
+@pytest.mark.skipif(
+    not glob.glob(f"{REF_DATA}/states_*.csv"),
+    reason=f"reference crawl CSVs absent: {REF_DATA}/states_*.csv",
+)
 def test_clean_csv_export_matches_reference_contract(spark, tmp_path):
     src = sorted(glob.glob(f"{REF_DATA}/states_*.csv"))[0]
     name = os.path.basename(src)

@@ -127,14 +127,21 @@ def test_scan_is_columnar_parquet(spark):
 def test_partition_pruning_on_silver(spark, tmp_path):
     """The silver zone is partitioned by event_date; a date filter must
     prune partitions at the scan (PartitionFilters), not post-filter."""
+    import csv
+
     import pyspark.sql.functions as F
 
-    from data_warehouse_opensky_spark.schemas import RAW_SCHEMA
+    from data_warehouse_opensky_spark.schemas import RAW_COLUMNS, RAW_SCHEMA
     from data_warehouse_opensky_spark.transform import clean_state_vectors
 
-    raw = spark.read.csv(
-        "/root/reference/data/states_*.csv", header=True, schema=RAW_SCHEMA
-    )
+    # Two crawl rows on different days (2025-11-13 and 2025-11-14 11:00 UTC).
+    landing = tmp_path / "states_pruning.csv"
+    with open(landing, "w", newline="") as f:
+        w = csv.DictWriter(f, RAW_COLUMNS)
+        w.writeheader()
+        w.writerow({"icao24": "abc123", "last_contact": "1763031600"})
+        w.writerow({"icao24": "abc124", "last_contact": "1763118000"})
+    raw = spark.read.csv(str(landing), header=True, schema=RAW_SCHEMA)
     silver = str(tmp_path / "silver")
     clean_state_vectors(raw).withColumn(
         "event_date", F.to_date(F.coalesce("last_contact", "load_timestamp"))
@@ -1043,7 +1050,17 @@ def test_aqe_splits_skewed_join_partitions(spark):
     deterministic salting is the planned half for keys so hot that
     even split partitions overwhelm one executor. Thresholds are
     lowered to make sf-test data exhibit 'skew'; production uses the
-    defaults with real partition sizes."""
+    defaults with real partition sizes.
+
+    AQE judges skew in shuffle bytes, not rows: a partition is split
+    only when its size exceeds skewedPartitionFactor x the median
+    partition size AND the byte threshold. The shuffle is compressed,
+    so the hot rows must not repeat with a short period: a periodic `v`
+    such as `id*17 % 1003` compresses the hot partition to 1.75x the
+    median bytes at 4 shuffle partitions (13x in rows), and no split
+    fires. A hashed `v` makes the bytes skew like the rows. The split
+    can fire only with 3 or more shuffle partitions: with 2, the median
+    is the mean of both sizes, and no size exceeds twice it."""
     import pyspark.sql.functions as F
 
     confs = {
@@ -1061,7 +1078,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
             F.when(F.col("id") < 300000, F.lit(7))
             .otherwise(F.col("id") % 1000)
             .alias("k"),
-            (F.col("id") * 17 % 1003).alias("v"),
+            (F.xxhash64("id") % 1000003).alias("v"),
         )
         dim = spark.range(1000).select(
             F.col("id").alias("k"), (F.col("id") * 3).alias("w")

@@ -5,6 +5,8 @@ thing to a golden corpus the reference provides."""
 
 from __future__ import annotations
 
+import glob
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -12,6 +14,12 @@ from data_warehouse_opensky_spark.schemas import CLEAN_COLUMNS, RAW_SCHEMA
 from data_warehouse_opensky_spark.transform import clean_state_vectors
 
 REF_GLOB = "/root/reference/data/states_*.csv"
+
+#: The golden tests read the reference crawl CSVs; run them wherever
+#: those files exist. The synthetic tests below need no corpus.
+needs_corpus = pytest.mark.skipif(
+    not glob.glob(REF_GLOB), reason=f"reference crawl CSVs absent: {REF_GLOB}"
+)
 
 GOLDEN_NULLS = {
     "baro_altitude": 295,
@@ -32,11 +40,13 @@ def clean(spark):
     return df
 
 
+@needs_corpus
 def test_row_count_and_columns(clean):
     assert clean.count() == 1834
     assert list(clean.columns) == list(CLEAN_COLUMNS)
 
 
+@needs_corpus
 def test_golden_null_profile(clean):
     aggs = [
         (F.count("*") - F.count(c)).alias(c) for c in GOLDEN_NULLS
@@ -45,15 +55,18 @@ def test_golden_null_profile(clean):
     assert row == GOLDEN_NULLS
 
 
+@needs_corpus
 def test_distinct_aircraft(clean):
     assert clean.select("icao24").distinct().count() == 1447
 
 
+@needs_corpus
 def test_position_source_always_zero(clean):
     vals = [r[0] for r in clean.select("position_source").distinct().collect()]
     assert vals == [0]
 
 
+@needs_corpus
 def test_callsign_padding_preserved(clean):
     """SURVEY §1.3: 8-char right-padded callsigns must NOT be trimmed."""
     padded = clean.filter(F.col("callsign").rlike(" $")).count()
@@ -106,6 +119,7 @@ def test_missing_columns_backfilled_null(spark):
     assert row.velocity is None and row.squawk is None
 
 
+@needs_corpus
 def test_squawk_stays_string(clean):
     """Documented divergence: squawk keeps leading zeros (the reference
     float-ifies by accident — SURVEY §1.3)."""
