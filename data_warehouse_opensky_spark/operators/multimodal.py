@@ -3,10 +3,9 @@
 Images/audio/video are opaque `binary` columns with typed metadata.
 The Spark-side plumbing — schema, Arrow batch shape, mapInPandas
 signatures, partitioning — is real and tested; the actual media
-decode is stubbed (this container ships no image/audio libs):
-`decode_image_real` raises NotImplementedError, and
-`decode_image_meta` substitutes a deterministic fake decode so the
-pipeline (and its SQL oracle) is end-to-end verifiable.
+decode is stubbed: `decode_image_meta` substitutes a deterministic
+fake decode so the pipeline (and its SQL oracle) is end-to-end
+verifiable.
 
 Why mapInPandas: decode is inherently Python-library work, so the
 correct Spark shape is Arrow-batched pandas iteration (10-100× over
@@ -59,55 +58,6 @@ def attach_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.withColumn("payload", F.encode(F.col(text_col), "utf-8")).withColumn(
         "payload_md5", F.md5(F.col("payload"))
     )
-
-
-try:  # optional extra: the real decoder exists only when Pillow does
-    from PIL import Image as _PILImage
-except ImportError:  # pragma: no cover - container ships no image libs
-    _PILImage = None
-
-HAS_PIL = _PILImage is not None
-
-
-def decode_image_real(payload: bytes) -> tuple[int, int, int]:
-    """Real decode via Pillow when installed (extras dependency), else
-    NotImplementedError. The deterministic fake (`decode_image_meta`)
-    stays the driver-gated oracle path either way — correctness of the
-    pipeline contract never depends on an optional native lib.
-    """
-    if _PILImage is None:
-        raise NotImplementedError(
-            "image decode requires Pillow (pip install pillow); the "
-            "deterministic fake decode_image_meta is the gated path"
-        )
-    import io
-
-    with _PILImage.open(io.BytesIO(payload)) as img:
-        width, height = img.size
-        channels = len(img.getbands())
-    return width, height, channels
-
-
-def decode_image_meta_pil(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas twin of `decode_image_meta` over the REAL decoder —
-    identical output schema and batch shape, so swapping fake→real is a
-    one-symbol change for a deployment that ships Pillow. Tested only
-    when Pillow is importable (tests/test_operators.py)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [decode_image_real(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "width": pd.Series([d[0] for d in dims], dtype="int32"),
-                    "height": pd.Series([d[1] for d in dims], dtype="int32"),
-                    "channels": pd.Series([d[2] for d in dims], dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(run, MEDIA_META_SCHEMA)
 
 
 def decode_image_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

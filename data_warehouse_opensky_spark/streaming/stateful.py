@@ -91,62 +91,6 @@ def running_user_stats(events: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 SESSION_GAP_S = 60
 
-SESSION_OUTPUT_SCHEMA = "user_id long, n_events long, start_s long, end_s long"
-
-SESSION_STATE_SCHEMA = "n long, mn long, mx long"
-
-
-def _close_session(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"user_id": [], "n_events": [], "start_s": [], "end_s": []}
-    )
-    if state.hasTimedOut:
-        n, mn, mx = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "start_s": [mn], "end_s": [mx]}
-        )
-        return
-    n, mn, mx = state.get if state.exists else (0, None, None)
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        n += len(pdf)
-        bmn, bmx = int(pdf["ts_s"].min()), int(pdf["ts_s"].max())
-        mn = bmn if mn is None else min(mn, bmn)
-        mx = bmx if mx is None else max(mx, bmx)
-    state.update((n, mn, mx))
-    # Session closes when the event-time watermark passes last-seen + gap.
-    state.setTimeoutTimestamp((mx + SESSION_GAP_S) * 1000)
-    yield empty
-
-
-def timeout_sessions(events: DataFrame, *, gap_s: int = SESSION_GAP_S) -> DataFrame:
-    """Sessions that EMIT ONLY WHEN CLOSED by the event-time watermark
-    (EventTimeTimeout): while events keep arriving within `gap_s` the
-    state stays silent; once the watermark passes last-event + gap the
-    session row (count, span) emits exactly once and the state is
-    removed. This is the timeout third of the arbitrary-stateful
-    contract — running_user_stats covers accumulate-and-emit,
-    session_window covers merge semantics, this covers
-    watermark-driven state EXPIRY (bounded state: every idle key is
-    guaranteed to leave the store one watermark advance later).
-    `events` needs (user_id, ts_s) with `ts` = timestamp_seconds(ts_s)
-    watermarked by the caller.
-    """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _close_session,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 DAY_SESSION_OUTPUT_SCHEMA = (
     "user_id long, day_s long, n_events long, start_s long, end_s long"
 )
@@ -263,59 +207,4 @@ def timeout_day_sessions(events: DataFrame) -> DataFrame:
         stateStructType=DAY_SESSION_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# --------------------------------------------------------------------------
-# transformWithState twin (Spark 4 API) — OPTIONAL-DEPENDENCY GATED
-# --------------------------------------------------------------------------
-def running_user_counts_tws(events: DataFrame) -> DataFrame:
-    """`transformWithStateInPandas` twin of running_user_stats — the
-    Spark 4 stateful API that supersedes applyInPandasWithState
-    (typed per-key state handles, timers, TTL, RocksDB-only store).
-
-    Dependency boundary (same contract as the PIL decode twin,
-    operators/multimodal.py): the TWS Python runner speaks protobuf
-    to the JVM, so this path needs `google.protobuf`, which this
-    container does not ship — the import guard raises ImportError and
-    tests skip (tests/test_streaming.py::test_tws_running_counts).
-    The applyInPandasWithState twin above is the executable gate; this
-    function keeps the new-API shape compiled and covered where the
-    dependency exists. Callers must also set
-    spark.sql.streaming.stateStore.providerClass to the RocksDB
-    provider (TWS rejects the HDFS-backed default).
-    """
-    import google.protobuf  # noqa: F401 — hard requirement of the TWS runner
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("agg", "n BIGINT, max_c BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._st.exists():
-                n, max_c = self._st.get()
-            else:
-                n, max_c = 0, None
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    m = int(pdf["value_c"].max())
-                    max_c = m if max_c is None else max(max_c, m)
-            self._st.update((n, max_c))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value_c": [max_c]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningCounts(),
-        outputStructType="user_id long, n_events long, max_value_c long",
-        outputMode="Update",
-        timeMode="None",
     )

@@ -135,46 +135,3 @@ def write_staging_jdbc(
     `batchsize`-row batches — the Spark replacement for the
     reference's sequential 100k-row chunk loop (:137,:145)."""
     write_jdbc_append(df, staging_jdbc_options(db, table, batchsize))
-
-
-# --------------------------------------------------------------------------
-# Training-data handoff: deterministic JSONL shards
-# --------------------------------------------------------------------------
-def export_jsonl_shards(
-    df: DataFrame,
-    out_dir: str,
-    *,
-    shard_key: str,
-    n_shards: int,
-    compression: str | None = "gzip",
-) -> list[str]:
-    """Write `df` as `n_shards` JSON-Lines shards keyed by a
-    deterministic hash of `shard_key` — the handoff format training
-    loaders consume (one JSON object per line, fixed shard count, a
-    given row always lands in the same shard regardless of cluster
-    size or run).
-
-    Layout: `out_dir/shard=K/part-*.json[.gz]`. Sharding is
-    `pmod(xxhash64(key), n_shards)`, so downstream loaders can
-    co-shard different exports of the same key space. Within a shard, rows
-    are sorted by the shard key (sortWithinPartitions after a
-    1-partition-per-shard repartition) so shard content is
-    byte-reproducible.
-
-    At 100 TB: one hash exchange into n_shards writer tasks; pick
-    n_shards so a shard is a few hundred MB compressed (the loader's
-    unit of parallelism), and gzip (splittable-agnostic: JSONL shards
-    are consumed whole by loaders, not re-scanned by Spark).
-    """
-    shard = F.pmod(F.xxhash64(F.col(shard_key)), F.lit(n_shards)).alias("shard")
-    w = (
-        df.withColumn("shard", shard)
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", shard_key)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-    )
-    if compression:
-        w = w.option("compression", compression)
-    w.json(out_dir)
-    return sorted(glob.glob(os.path.join(out_dir, "shard=*")))

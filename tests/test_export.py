@@ -156,20 +156,31 @@ def test_stage_files_emits_clean_csv(spark, tmp_path):
     from data_warehouse_opensky_spark.warehouse.control import FileLog
     from data_warehouse_opensky_spark.warehouse.etl import stage_files
 
-    src = sorted(glob.glob(f"{REF_DATA}/states_*.csv"))[:2]
-    log = FileLog(spark, str(tmp_path / "control"))
+    from .test_control import HEADER
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    row = "abcdef,CALL1   ,Nowhere,1700000000,{},1.0,2.0,3.0,false,4.0,5.0,6.0,,7.0,1000,false,0\n"
+    sizes = {"states_a.csv": 3, "states_b.csv": 2}
+    for name, n in sizes.items():
+        (landing / name).write_text(HEADER + "".join(row.format(1700000010 + i) for i in range(n)))
     csv_dir = str(tmp_path / "DataStaging")
+
     res = stage_files(
         spark,
-        src,
+        [str(landing / name) for name in sizes],
         str(tmp_path / "bronze"),
         str(tmp_path / "silver"),
-        log,
+        FileLog(spark, str(tmp_path / "control")),
         clean_csv_dir=csv_dir,
     )
-    assert all(v == "CLEAN_EXPORTED" for v in res.values())
-    for p in src:
-        assert os.path.exists(f"{csv_dir}/clean_{os.path.basename(p)}")
+
+    assert res == {name: "CLEAN_EXPORTED" for name in sizes}
+    assert sorted(os.listdir(csv_dir)) == [f"clean_{name}" for name in sorted(sizes)]
+    for name, n in sizes.items():
+        header, *rows = list(csv.reader(open(f"{csv_dir}/clean_{name}")))
+        assert header == list(CLEAN_COLUMNS)
+        assert len(rows) == n
 
 
 def test_stage_files_optional_sinks_keep_exact_names(spark, tmp_path, monkeypatch):
@@ -218,43 +229,6 @@ def test_stage_files_optional_sinks_keep_exact_names(spark, tmp_path, monkeypatc
     assert back.columns == [f.name for f in RAW_SCHEMA] + ["file_source", "load_timestamp"]
     per_file = back.groupBy("file_source").count().collect()
     assert {r.file_source: r["count"] for r in per_file} == sizes
-
-
-def test_export_jsonl_shards_deterministic_and_complete(spark, tmp_path):
-    """JSONL export: every row lands in exactly one shard, a row's
-    shard is stable across runs/partitionings, and shard files parse
-    as JSON-lines."""
-    import glob
-    import gzip
-    import json
-
-    from data_warehouse_opensky_spark.sources import load_table
-    from data_warehouse_opensky_spark.warehouse.export import export_jsonl_shards
-    from .conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang", "n_chars")
-    out1 = str(tmp_path / "j1")
-    shards = export_jsonl_shards(docs, out1, shard_key="doc_id", n_shards=4)
-    assert len(shards) == 4
-
-    def read_all(out):
-        rows = {}
-        for sd in sorted(glob.glob(out + "/shard=*")):
-            k = int(sd.rsplit("=", 1)[1])
-            for f in glob.glob(sd + "/part-*"):
-                op = gzip.open if f.endswith(".gz") else open
-                with op(f, "rt") as fh:
-                    for line in fh:
-                        r = json.loads(line)
-                        rows[r["doc_id"]] = (k, r["lang"], r["n_chars"])
-        return rows
-
-    r1 = read_all(out1)
-    assert len(r1) == docs.count()  # complete, no dup doc_ids
-
-    out2 = str(tmp_path / "j2")
-    export_jsonl_shards(docs.repartition(13), out2, shard_key="doc_id", n_shards=4)
-    assert read_all(out2) == r1  # shard assignment is partitioning-independent
 
 
 def test_columnar_format_round_trips(spark, tmp_path):

@@ -1,235 +1,14 @@
-"""Incremental mart refresh + compaction mechanics
-(warehouse/maintenance.py).
+"""Control-log compaction (warehouse/control.py).
 
-The catalog query `mart_incremental_merge` gates the partial-merge
-ALGEBRA against DuckDB; these tests gate the refresh MECHANICS: a new
-day's refresh rewrites only its own partition directory (asserted by
-inode — the 100 TB property), a day-at-a-time replay converges to the
-flat recompute, and compaction changes file layout but not content.
+`FileLog` and `JobLog` are append-only event logs; `compact()` folds
+each log back to one row per key. These tests check that compaction
+never changes `current()`, that it is idempotent and a no-op on an
+empty log, that a reader in the window between the snapshot append
+and the delete sees the same state, and that the `maybe_compact`
+cadence keeps the directory listing bounded.
 """
 
 from __future__ import annotations
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from data_warehouse_opensky_spark.sources import load_table
-from data_warehouse_opensky_spark.warehouse.maintenance import (
-    DAY_COL,
-    compact_directory,
-    event_day_partials,
-    merge_mart,
-    refresh_partials,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _inodes(partials_dir: str, day: str) -> dict[str, int]:
-    d = f"{partials_dir}/{DAY_COL}={day}"
-    return {
-        f: os.stat(os.path.join(d, f)).st_ino
-        for f in os.listdir(d)
-        if f.endswith(".parquet")
-    }
-
-
-def _flat_recompute(events):
-    return (
-        events.withColumn("d", F.date_format("ts", "yyyy-MM-dd"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")).cast("long") / 100.0
-             ).alias("total_value"),
-            F.countDistinct("d").cast("long").alias("n_days"),
-            F.min("d").alias("first_day"),
-            F.max("d").alias("last_day"),
-            F.min("user_id").cast("long").alias("min_user"),
-            F.max("user_id").cast("long").alias("max_user"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@pytest.fixture()
-def events(spark):
-    return load_table(spark, SF_DIR, "events")
-
-
-def test_incremental_refresh_touches_only_new_day(spark, events, tmp_path):
-    pdir = str(tmp_path / "partials")
-    days = sorted(
-        r[0]
-        for r in events.select(
-            F.date_format("ts", "yyyy-MM-dd").alias("d")
-        ).distinct().collect()
-    )
-    assert len(days) >= 3, "need several days of events for the scenario"
-    last = days[-1]
-    history = events.filter(F.date_format("ts", "yyyy-MM-dd") != last)
-
-    # Day 0..N-1 already loaded.
-    refresh_partials(history, pdir)
-    frozen = {d: _inodes(pdir, d) for d in days[:-1]}
-
-    # The new day lands: refresh ONLY that day.
-    refresh_partials(events, pdir, days=[last])
-
-    # Mechanics: every prior day's partition files are bit-the-same
-    # inodes — dynamic partition overwrite never rewrote them.
-    for d in days[:-1]:
-        assert _inodes(pdir, d) == frozen[d], f"partition {d} was rewritten"
-    assert os.path.isdir(f"{pdir}/{DAY_COL}={last}")
-
-    # Algebra: mart from partials == flat recompute over raw events.
-    got = merge_mart(spark, pdir).collect()
-    want = _flat_recompute(events).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-
-def test_refresh_day_replay_converges(spark, events, tmp_path):
-    """Loading day-by-day (the steady-state pipeline) ends at the same
-    mart as loading everything at once."""
-    pdir = str(tmp_path / "partials")
-    days = sorted(
-        r[0]
-        for r in events.select(
-            F.date_format("ts", "yyyy-MM-dd").alias("d")
-        ).distinct().collect()
-    )
-    first = True
-    for d in days:
-        if first:
-            # bootstrap write must create the table even for one day
-            refresh_partials(
-                events.filter(F.date_format("ts", "yyyy-MM-dd") == d), pdir
-            )
-            first = False
-        else:
-            refresh_partials(events, pdir, days=[d])
-    got = merge_mart(spark, pdir).collect()
-    want = _flat_recompute(events).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-
-def test_compact_directory_preserves_content(spark, events, tmp_path):
-    ddir = str(tmp_path / "scattered")
-    events.repartition(16).write.parquet(ddir)
-    n = events.count()
-
-    before, after = compact_directory(spark, ddir, target_rows_per_file=(n + 1) // 2)
-    assert before == 16
-    assert after == 2
-
-    back = spark.read.parquet(ddir)
-    assert back.count() == n
-    # content identical (order-insensitive): same per-type counts + sums
-    a = sorted(map(tuple, event_day_partials(back).collect()))
-    b = sorted(map(tuple, event_day_partials(events).collect()))
-    assert a == b
-
-
-def test_cluster_by_range_enables_file_skipping(spark, events, tmp_path):
-    """Range clustering must produce files with DISJOINT key ranges in
-    their parquet footers, so a key-range predicate touches a strict
-    subset of files — the data-skipping property, asserted from the
-    actual written statistics rather than the plan."""
-    import pyarrow.parquet as pq
-
-    from data_warehouse_opensky_spark.warehouse.maintenance import cluster_by_range
-
-    out = str(tmp_path / "clustered")
-    cluster_by_range(events, out, "user_id", n_files=8)
-
-    files = sorted(
-        os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")
-    )
-    assert len(files) == 8
-    ranges = []
-    for path in files:
-        md = pq.ParquetFile(path).metadata
-        idx = next(
-            i for i in range(md.num_columns)
-            if md.row_group(0).column(i).path_in_schema == "user_id"
-        )
-        los, his = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            los.append(st.min)
-            his.append(st.max)
-        ranges.append((min(los), max(his)))
-    ranges.sort()
-    # Disjoint: every file's min is past the previous file's max.
-    for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a <= lo_b, ranges
-    # Skipping: a predicate covering ~1/5 of the key space must exclude
-    # most files on stats alone.
-    lo_k, hi_k = ranges[0][0], ranges[-1][1]
-    a, b = lo_k, lo_k + (hi_k - lo_k) // 5
-    touched = [r for r in ranges if not (r[1] < a or r[0] > b)]
-    assert len(touched) < len(files) // 2, (ranges, (a, b))
-    # Content preserved.
-    back = spark.read.parquet(out)
-    assert back.count() == events.count()
-
-
-def test_cluster_by_zorder_skips_on_both_dimensions(spark, tmp_path):
-    """Z-order clustering must yield footer stats selective on BOTH
-    dimensions: for a range predicate on either column, the set of
-    files whose [min,max] intersects the predicate is a strict subset
-    — the property single-column range clustering can only give one
-    column."""
-    import pyarrow.parquet as pq
-
-    from data_warehouse_opensky_spark.warehouse.maintenance import cluster_by_zorder
-
-    n = 4096
-    grid = spark.range(n).selectExpr(
-        "CAST(id % 64 AS BIGINT) AS x", "CAST(id DIV 64 AS BIGINT) AS y"
-    )
-    out = str(tmp_path / "zordered")
-    cluster_by_zorder(grid, out, "x", "y", n_files=16)
-
-    files = sorted(
-        os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")
-    )
-    assert len(files) == 16
-
-    def col_ranges(col):
-        out_r = []
-        for path in files:
-            md = pq.ParquetFile(path).metadata
-            idx = next(
-                i for i in range(md.num_columns)
-                if md.row_group(0).column(i).path_in_schema == col
-            )
-            los, his = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                los.append(st.min); his.append(st.max)
-            out_r.append((min(los), max(his)))
-        return out_r
-
-    for col in ("x", "y"):
-        ranges = col_ranges(col)
-        lo_k = min(r[0] for r in ranges); hi_k = max(r[1] for r in ranges)
-        a, b = lo_k, lo_k + (hi_k - lo_k) // 4  # bottom quarter of the key space
-        touched = [r for r in ranges if not (r[1] < a or r[0] > b)]
-        assert len(touched) <= len(files) * 3 // 4, (col, ranges)
-
-    back = spark.read.parquet(out)
-    assert back.count() == n
-    assert {tuple(r) for r in back.select("x", "y").collect()} == {
-        (i % 64, i // 64) for i in range(n)
-    }
-
-
-# ---------------------------------------------------------------------------
-# Control-table event-log compaction (warehouse/control.py, VERDICT r10 #3)
-# ---------------------------------------------------------------------------
 
 
 def _current_rows(log):

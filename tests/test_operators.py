@@ -3,7 +3,6 @@ agree with their naive reference forms (SURVEY §5 layering (1))."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -247,40 +246,6 @@ def test_connected_components_long_chain_pointer_jump(spark):
         for r in connected_components(edges).collect()
     }
     assert got == {(100 + i, 100) for i in range(n)}
-
-
-def test_decode_image_real_requires_pillow_or_decodes(spark):
-    """The real-decoder boundary is honest both ways: without Pillow it
-    raises NotImplementedError (never silently fakes); with Pillow the
-    mapInPandas twin returns true dims under the SAME schema as the
-    deterministic fake, so swapping fake->real is plumbing-compatible."""
-    import pytest
-
-    from data_warehouse_opensky_spark.operators.multimodal import (
-        HAS_PIL,
-        MEDIA_META_SCHEMA,
-        decode_image_meta_pil,
-        decode_image_real,
-    )
-
-    if not HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            decode_image_real(b"\x89PNG\r\n\x1a\n")
-        return
-
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (20, 10)).save(buf, format="PNG")
-    png = buf.getvalue()
-    df = spark.createDataFrame([(1, png)], "doc_id long, payload binary")
-    out = decode_image_meta_pil(df)
-    assert out.schema == MEDIA_META_SCHEMA
-    row = out.collect()[0]
-    assert (row.width, row.height, row.channels) == (20, 10, 3)
-    assert row.n_bytes == len(png)
 
 
 def test_decontaminate_bloom_prefilter_identical_output(spark):

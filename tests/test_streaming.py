@@ -521,50 +521,6 @@ def test_late_rows_dropped_by_watermark(spark, tmp_path):
     assert t0 not in starts
 
 
-def test_timeout_sessions_close_on_watermark(spark, tmp_path):
-    """EventTimeTimeout sessions emit ONLY when the watermark passes
-    last-event + gap: user 0's burst closes once a later batch advances
-    the watermark; the still-fresh user stays silent (bounded state —
-    idle keys leave the store one watermark advance later)."""
-    import pandas as pd
-
-    from data_warehouse_opensky_spark.streaming.stateful import timeout_sessions
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    # Batch 1: user 0, a 3-event burst at ts 1000..1010.
-    pd.DataFrame(
-        [{"user_id": 0, "ts_s": 1000}, {"user_id": 0, "ts_s": 1005},
-         {"user_id": 0, "ts_s": 1010}]
-    ).to_parquet(src / "b1.parquet")
-    # Batch 2: user 1 far in the future — advances the watermark past
-    # user 0's timeout (1010 + 60).
-    pd.DataFrame([{"user_id": 1, "ts_s": 5000}]).to_parquet(src / "b2.parquet")
-    # Batch 3: another fresh event so the batch-2 watermark is applied.
-    pd.DataFrame([{"user_id": 2, "ts_s": 5001}]).to_parquet(src / "b3.parquet")
-
-    schema = spark.read.parquet(str(src)).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withColumn("ts", F.timestamp_seconds(F.col("ts_s")))
-        .withWatermark("ts", "0 seconds")
-    )
-    q = (
-        timeout_sessions(stream)
-        .writeStream.format("memory")
-        .queryName("timeout_sessions_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("timeout_sessions_sink").collect()
-    closed = {r.user_id: (r.n_events, r.start_s, r.end_s) for r in rows}
-    assert closed == {0: (3, 1000, 1010)}, rows
-
-
 def test_dedup_within_watermark_evicts_and_dedups(spark, tmp_path):
     """dropDuplicatesWithinWatermark must (a) drop a duplicate arriving
     in a later micro-batch while its key is inside the horizon, and
@@ -618,68 +574,6 @@ def test_dedup_within_watermark_evicts_and_dedups(spark, tmp_path):
     assert removed > 0, f"watermark never evicted dedup state: {with_state}"
     final_total = with_state[-1]["stateOperators"][0]["numRowsTotal"]
     assert final_total < 90, f"state grew unbounded: {with_state}"
-
-
-def test_tws_running_counts(spark, tmp_path):
-    """transformWithStateInPandas twin (Spark 4 stateful API): the
-    dependency boundary is honest both ways, same contract as the PIL
-    decode twin (test_decode_image_real_requires_pillow_or_decodes).
-    Without google.protobuf (the TWS runner's wire dependency, the
-    `tws` extra) the operator raises ImportError at construction —
-    never a silent no-op — and that IS the pass. With it, the final
-    per-key state must equal the batch aggregate — identical gate to
-    the applyInPandasWithState twin."""
-    import pytest
-
-    from data_warehouse_opensky_spark.plans.streaming_queries import (
-        _drain_to_memory,
-    )
-    from data_warehouse_opensky_spark.streaming.stateful import (
-        running_user_counts_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError):
-            running_user_counts_tws(spark.range(0).selectExpr("id user_id"))
-        return
-
-    import pyspark.sql.functions as F
-
-    rows = [(u, i, (u * 31 + i) % 97) for u in range(5) for i in range(20)]
-    df = spark.createDataFrame(rows, "user_id BIGINT, i BIGINT, value_c BIGINT")
-    df.coalesce(1).write.parquet(str(tmp_path / "in"))
-    schema = spark.read.parquet(str(tmp_path / "in")).schema
-    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        sink = _drain_to_memory(running_user_counts_tws(stream), mode="update")
-        got = {
-            r["user_id"]: (r["n_events"], r["max_value_c"])
-            for r in sink.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("max_value_c").alias("max_value_c"),
-            )
-            .collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    want = {
-        u: (20, max((u * 31 + i) % 97 for i in range(20))) for u in range(5)
-    }
-    assert got == want
 
 
 def test_stateful_agg_under_rocksdb_provider(spark, tmp_path):
