@@ -1,13 +1,10 @@
-from .exact import bp, cents, e4_to_dollars, e6_to_dollars, epoch_s
+from .exact import bp, cents
 from .casts import strict_bool, try_double, try_int
 from .geo import haversine_km
 
 __all__ = [
     "bp",
     "cents",
-    "e4_to_dollars",
-    "e6_to_dollars",
-    "epoch_s",
     "strict_bool",
     "try_double",
     "try_int",

@@ -26,18 +26,3 @@ def bp(c: Column | str) -> Column:
     """Exact 2-decimal rate (0.07) → integer basis points*? (7): x*100."""
     c = F.col(c) if isinstance(c, str) else c
     return F.round(c * 100).cast("long")
-
-
-def e4_to_dollars(c: Column) -> Column:
-    """1e-4-dollar integer units → double dollars (deterministic division)."""
-    return (c / F.lit(10000.0)).alias("_")
-
-
-def e6_to_dollars(c: Column) -> Column:
-    return (c / F.lit(1000000.0)).alias("_")
-
-
-def epoch_s(c: Column | str) -> Column:
-    """Timestamp → epoch seconds as BIGINT (UTC session; never emit raw ts)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.unix_timestamp(c).cast("long")

@@ -421,10 +421,9 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-dup pairs by simhash hamming distance.
 
-    Bench-scale plan is the O(n²) self-join on the (tiny) signature
-    table; the 100 TB plan blocks on signature prefixes first (each
-    pair within hamming h shares at least one of h+1 prefix blocks) —
-    see `simhash_blocked_pairs`.
+    The plan is the O(n²) self-join on the (tiny) signature table. At
+    100 TB it would block on signature blocks first: each pair within
+    hamming h agrees exactly on at least one of h+1 blocks.
     """
     sig = simhash(docs, id_col, text_col, bits)
     a = sig.alias("a")
@@ -436,57 +435,5 @@ def simhash_pairs(
             F.col("b.doc_id").alias("doc_b"),
             F.expr("bit_count(a.simhash ^ b.simhash)").cast("int").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_blocked_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-) -> DataFrame:
-    """Scale path: pigeonhole-blocked simhash pairs.
-
-    Split the signature into `n_blocks` contiguous bit blocks; any pair
-    within hamming ≤ n_blocks−1 agrees exactly on ≥1 block, so an
-    equi-join per block finds all such pairs without an O(n²) product.
-    """
-    sig = simhash(docs, id_col, text_col, bits)
-    width = bits // n_blocks
-    blocks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block"),
-                        F.expr(
-                            f"(simhash >> {i * width}) & {(1 << width) - 1}"
-                        ).alias("key"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.block", "bk.key")
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").cast("int").alias("hamming"),
-        )
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )

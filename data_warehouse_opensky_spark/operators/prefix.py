@@ -176,66 +176,6 @@ def distributed_running_max_exclusive(
     )
 
 
-def distributed_cumsum_grouped(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    value_col: str,
-    out_col: str = "running_total",
-    num_partitions: int | None = None,
-    total_col: str | None = None,
-) -> DataFrame:
-    """Per-GROUP running sum without per-group serialization.
-
-    The naive `Window.partitionBy(group).orderBy(order)` puts each
-    group on ONE task — with few, large groups (3 return flags over a
-    fact-sized grain series) the scan serializes onto #groups cores.
-    Instead: one GLOBAL parallel scan over the (group, order) total
-    order (`distributed_cumsum` — every core busy), then subtract each
-    group's start offset, computed as a running sum over the #groups-row
-    totals frame (pre-aggregated exemption; joined back small-side).
-    Per-group running sums fall out exactly: within a group the global
-    cumsum and the group cumsum differ by the constant mass of all
-    earlier groups.
-
-    `group_cols + order_cols` must be a UNIQUE key (same contract as
-    distributed_cumsum). If `total_col` is set, each row also carries
-    its group's total mass (free — the offsets frame already has it;
-    callers needing a per-group total should take it from here instead
-    of re-aggregating the input).
-
-    The input is persisted (it feeds both the ranged scan and the
-    totals agg — without the cache it would be recomputed per subtree);
-    cache lifecycle follows the catalog contract (session owner clears).
-    """
-    df = df.persist()
-    full = distributed_cumsum(
-        df,
-        group_cols + order_cols,
-        value_col,
-        out_col="_gcum",
-        num_partitions=num_partitions,
-    )
-    totals = df.groupBy(*group_cols).agg(F.sum(value_col).alias("_gt"))
-    w = (
-        Window.orderBy(*group_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        *group_cols,
-        F.col("_gt"),
-        F.coalesce(F.sum("_gt").over(w), F.lit(0)).alias("_goff"),
-    )
-    out = (
-        full.join(offs, group_cols)
-        .withColumn(out_col, (F.col("_gcum") - F.col("_goff")).cast("long"))
-        .drop("_gcum", "_goff")
-    )
-    if total_col is not None:
-        return out.withColumnRenamed("_gt", total_col)
-    return out.drop("_gt")
-
-
 def distributed_cumsum_small_groups(
     df: DataFrame,
     group_cols: list[str],
@@ -247,12 +187,11 @@ def distributed_cumsum_small_groups(
 ) -> DataFrame:
     """Per-group running sum for a SMALL group domain, fully fused.
 
-    `distributed_cumsum_grouped` is the general shape (any number of
-    groups) but pays for it: a second scan of the input for the group
-    totals, a #groups-row window, and TWO joins back. When the group
-    domain is control-plane bounded (≤ ~1e3 groups — return flags,
-    statuses, buckets), everything the correction needs can ride the
-    ONE per-partition totals collect:
+    A general grouped scan (any number of groups) would pay a second
+    scan of the input for the group totals, a #groups-row window, and
+    TWO joins back. When the group domain is control-plane bounded
+    (≤ ~1e3 groups — return flags, statuses, buckets), everything the
+    correction needs can ride the ONE per-partition totals collect:
 
     1. Range-partition by (group, order) — groups are then contiguous
        in the global order — and window-scan each partition locally

@@ -26,7 +26,7 @@ from . import sketches  # noqa: E402,F401
 # latest-driver-check tier remaining; after this round no catalog
 # entry's latest external check is older than round 7 — then the 4
 # queries ADDED in round 12 (never driver-checked: the MERGE INTO
-# replay that puts VersionedParquetTable under the oracle harness,
+# replay that puts the latest-wins upsert under the oracle harness,
 # VERDICT r11 #2, the two line-grain Gopher gate families, VERDICT
 # r11 #5, and the cross-document boilerplate-line profile), then the
 # one plan whose operator CODE changed in round 12

@@ -291,8 +291,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_simhash_pairs",
     tier="T3",
-    doc="SimHash near-dup pairs, hamming ≤ 8 (T3.2). Bench: signature "
-    "self-join; 100 TB: pigeonhole block join (simhash_blocked_pairs).",
+    doc="SimHash near-dup pairs, hamming ≤ 8 (T3.2): a self-join on "
+    "the signature table.",
     oracle=_simhash_sql()
     + """
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,

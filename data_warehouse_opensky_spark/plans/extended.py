@@ -1057,22 +1057,20 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "merge_upsert_replay",
     tier="T1",
-    doc="VersionedParquetTable MERGE INTO, driver-checked end-to-end "
-    "(VERDICT r11 #2; T1.7 — the reference's keyed UPDATE runs in "
-    "Postgres, load_warehouse.py:117-129): init a versioned table "
-    "from the orders snapshot slice (keys not divisible by 3), MERGE "
-    "a deterministic CDC batch (keys divisible by 7: status 'M', "
-    "price +10.00 — some match existing rows, the %21==0 overlap "
-    "inserts new keys into existing partitions, %3==0&&%7==0 keys "
-    "are pure inserts), read the committed version back. The oracle "
-    "replays the same upsert in SQL: source UNION ALL (target "
-    "ANTI-JOIN source). Exercises the whole table format: atomic "
-    "pointer flip, partition-grain copy-on-write on o_year, "
-    "hard-linked untouched partitions, schema re-application on "
-    "read. Money in exact integer cents; the date as a string. At "
-    "100 TB the merge cost is the touched partitions only — the "
-    "untouched years are hard-links (inode-asserted in "
-    "tests/test_versioned.py).",
+    doc="MERGE INTO as a latest-wins upsert, checked end-to-end "
+    "(T1.7 — the reference's keyed UPDATE runs in Postgres, "
+    "load_warehouse.py:117-129), on the streaming sink's kernel "
+    "(streaming/sink.py::upsert_latest): upsert the orders snapshot "
+    "slice (keys not divisible by 3) into an empty flat parquet "
+    "snapshot at version 0, then a deterministic CDC batch (keys "
+    "divisible by 7: status 'M', price +10.00) at version 1, so a "
+    "source row replaces its key-matched target row (the %7==0 keys "
+    "not divisible by 3) and the %21==0 keys are pure inserts. Each "
+    "upsert merges the stale part files with the batch, appends the "
+    "result and deletes the stale files; the snapshot is read back. "
+    "The oracle replays the same upsert in SQL: source UNION ALL "
+    "(target ANTI-JOIN source). Money in exact integer cents; the date "
+    "as a string.",
     oracle="""
     WITH base AS (
       SELECT o_orderkey, o_custkey, o_orderstatus,
@@ -1098,7 +1096,7 @@ def merge_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..warehouse.versioned import VersionedParquetTable
+    from ..streaming.sink import upsert_latest
 
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1114,18 +1112,22 @@ def merge_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previous one's dir so repeated bench samples stay bounded.
     global _MERGE_REPLAY_DIR
     root = tempfile.mkdtemp(prefix="merge_replay_")
-    t = VersionedParquetTable(spark, root + "/orders", partition_col="o_year")
-    t.init(base.filter(F.col("o_orderkey") % 3 != 0))
-    t.merge_into(
-        base.filter(F.col("o_orderkey") % 7 == 0).withColumn(
-            "o_orderstatus", F.lit("M")
-        ).withColumn("price_cents", F.col("price_cents") + 1000),
-        key_cols=["o_orderkey"],
+    table = root + "/orders"
+    upsert_latest(
+        base.filter(F.col("o_orderkey") % 3 != 0).withColumn("_v", F.lit(0)),
+        table, ["o_orderkey"], "_v",
+    )
+    upsert_latest(
+        base.filter(F.col("o_orderkey") % 7 == 0)
+        .withColumn("o_orderstatus", F.lit("M"))
+        .withColumn("price_cents", F.col("price_cents") + 1000)
+        .withColumn("_v", F.lit(1)),
+        table, ["o_orderkey"], "_v",
     )
     prev, _MERGE_REPLAY_DIR = _MERGE_REPLAY_DIR, root
     if prev is not None:
         shutil.rmtree(prev, ignore_errors=True)
-    return t.read().select(*base.columns).orderBy("o_orderkey")
+    return spark.read.parquet(table).select(*base.columns).orderBy("o_orderkey")
 
 
 _MERGE_REPLAY_DIR: str | None = None

@@ -876,7 +876,7 @@ def stats_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Driver-measured (sf0.1, min-of-3): BENCH_r07 2.94 s (2.724 s
     # BENCH_r05 — drift is run-to-run noise on the two-job prefix
     # scan) with this fused shape; BENCH_r04 2.744 s with the general
-    # distributed_cumsum_grouped shape — at sf0.1 the two are within
+    # grouped shape (deleted since) — at sf0.1 the two are within
     # noise (the fused variant saves an input persist, a totals
     # shuffle, and a join, which is a plan-width win that matters at
     # scale, not at 600k rows). The wall is the near-unique price

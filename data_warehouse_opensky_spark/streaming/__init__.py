@@ -1,13 +1,3 @@
-from .ingest import (
-    session_window_stats,
-    stream_clean_to_silver,
-    stream_landing_source,
-    windowed_country_counts,
-)
+from .ingest import stream_clean_to_silver, stream_landing_source
 
-__all__ = [
-    "session_window_stats",
-    "stream_clean_to_silver",
-    "stream_landing_source",
-    "windowed_country_counts",
-]
+__all__ = ["stream_clean_to_silver", "stream_landing_source"]

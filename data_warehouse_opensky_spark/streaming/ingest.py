@@ -1,4 +1,4 @@
-"""Structured Streaming ingest + windowed analytics (SURVEY T2.16).
+"""Structured Streaming ingest (SURVEY T2.16).
 
 The reference's 10-minute crawl cadence + hourly staging load (diagram
 labels "Chạy 10p/lần" / "1h/lần") is a micro-batch streaming pattern;
@@ -11,7 +11,8 @@ depends on our own bookkeeping.
 
 Late data: `time_position`/`last_contact` (event time) lag
 `load_timestamp` (arrival) by design — watermarks bound that skew and
-let windowed state be dropped (bounded memory at 100 TB; the batch
+let windowed state be dropped in the catalog's streaming queries
+(plans/streaming_queries.py; bounded memory at 100 TB, where the batch
 equivalent would re-scan everything each hour).
 
 Each `stream_clean_to_silver` call is one availableNow drain, so the
@@ -30,7 +31,6 @@ meets (`opensky_api.landing_file_name` takes only `[A-Za-z0-9_-]` jobs):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import LANDING_GLOB, RAW_SCHEMA
@@ -69,71 +69,4 @@ def stream_clean_to_silver(
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def windowed_country_counts(
-    clean: DataFrame,
-    window_duration: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "20 minutes",
-) -> DataFrame:
-    """Tumbling/sliding event-time window agg with watermark (T2.16):
-    distinct-aircraft + mean velocity per country per window.
-
-    Works on both batch and streaming DataFrames (same code path — the
-    batch twin is the unit-test oracle)."""
-    win = (
-        F.window("last_contact", window_duration, slide)
-        if slide
-        else F.window("last_contact", window_duration)
-    )
-    src = clean
-    if clean.isStreaming:
-        src = clean.withWatermark("last_contact", watermark)
-    return (
-        src.filter(F.col("last_contact").isNotNull())
-        .groupBy(win.alias("w"), "origin_country")
-        .agg(
-            F.approx_count_distinct("icao24").alias("n_aircraft_approx"),
-            F.count("*").alias("n_states"),
-            F.avg("velocity").alias("avg_velocity"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "origin_country",
-            "n_aircraft_approx",
-            "n_states",
-            "avg_velocity",
-        )
-    )
-
-
-def session_window_stats(
-    clean: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Per-aircraft session windows (T2.16): a 'flight leg' ends after
-    `gap` of silence. Streaming-native via session_window."""
-    src = clean
-    if clean.isStreaming:
-        src = clean.withWatermark("last_contact", watermark)
-    return (
-        src.filter(F.col("last_contact").isNotNull())
-        .groupBy(F.session_window("last_contact", gap).alias("s"), "icao24")
-        .agg(
-            F.count("*").alias("n_pings"),
-            F.avg("velocity").alias("avg_velocity"),
-            F.max("baro_altitude").alias("max_altitude"),
-        )
-        .select(
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "icao24",
-            "n_pings",
-            "avg_velocity",
-            "max_altitude",
-        )
     )

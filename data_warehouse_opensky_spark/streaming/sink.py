@@ -36,6 +36,9 @@ Reader contract: a reader listing `current` between the append and the
 delete sees both snapshots, i.e. up to two rows per key. Readers that
 need one row per key at every instant read latest-wins per key, which
 is what the merge itself does.
+
+The replay and reader contracts hold for any caller of `upsert_latest`,
+not only `foreachBatch`.
 """
 
 from __future__ import annotations
@@ -68,6 +71,27 @@ def _merge_latest(
     return latest_per_key(merged, key_cols, [order_col, "_src"]).drop("_src")
 
 
+def upsert_latest(
+    batch: DataFrame, cur_path: str, key_cols: list[str], order_col: str
+) -> None:
+    """Upsert `batch` into the flat parquet snapshot at `cur_path`
+    (latest-wins per key by `order_col`, `batch` wins ties): merge the
+    stale part files with the batch, append the result, then delete the
+    stale files. See the module docstring for the replay contract."""
+    # Stale = part files and their `.part-*.crc` sidecars, listed
+    # before the append; the merge reads exactly the part files that
+    # the delete below removes.
+    names = os.listdir(cur_path) if os.path.isdir(cur_path) else []
+    stale = [n for n in names if n.lstrip(".").startswith("part-")]
+    parts = [os.path.join(cur_path, n) for n in stale if n.startswith("part-")]
+    target = batch.sparkSession.read.parquet(*parts) if parts else None
+    _merge_latest(target, batch, key_cols, order_col).write.mode(
+        "append"
+    ).parquet(cur_path)
+    for n in stale:
+        os.remove(os.path.join(cur_path, n))
+
+
 def upsert_parquet_sink(
     stream: DataFrame,
     sink_dir: str,
@@ -93,7 +117,6 @@ def upsert_parquet_sink(
     twin of the batch quarantine, so one poison row degrades to one
     quarantined row instead of a poisoned snapshot or a dead query.
     """
-    spark = stream.sparkSession
     cur_path = os.path.join(sink_dir, CURRENT)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
@@ -107,19 +130,7 @@ def upsert_parquet_sink(
             bad.withColumn("violations", F.concat_ws(",", "violations")).write.mode(
                 "overwrite"
             ).parquet(rejects_path)
-
-        # Stale = part files and their `.part-*.crc` sidecars, listed
-        # before the append; the merge reads exactly the part files that
-        # the delete below removes.
-        names = os.listdir(cur_path) if os.path.isdir(cur_path) else []
-        stale = [n for n in names if n.lstrip(".").startswith("part-")]
-        parts = [os.path.join(cur_path, n) for n in stale if n.startswith("part-")]
-        target = spark.read.parquet(*parts) if parts else None
-        _merge_latest(target, batch, key_cols, order_col).write.mode(
-            "append"
-        ).parquet(cur_path)
-        for n in stale:
-            os.remove(os.path.join(cur_path, n))
+        upsert_latest(batch, cur_path, key_cols, order_col)
 
     return (
         stream.writeStream.foreachBatch(apply_batch)

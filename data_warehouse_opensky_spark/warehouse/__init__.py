@@ -1,11 +1,9 @@
 from .control import FileLog, JobLog
 from .etl import build_gold_marts, discover_new_files, stage_files
-from .versioned import VersionedParquetTable
 
 __all__ = [
     "FileLog",
     "JobLog",
-    "VersionedParquetTable",
     "build_gold_marts",
     "discover_new_files",
     "stage_files",

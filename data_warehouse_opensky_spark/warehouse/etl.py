@@ -26,6 +26,7 @@ from __future__ import annotations
 import fnmatch
 import os
 import re
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
@@ -40,7 +41,26 @@ from ..sources.config import DbConfig
 from ..transform import source_file_name, to_silver
 from .control import FileLog
 from .export import export_clean_csv, write_staging_jdbc
-from .versioned import link_or_copy
+
+
+def link_or_copy(src: str, dst: str) -> None:
+    """Hard-link `src` to `dst`. Where the link fails (another
+    filesystem, no hard-link support) copy to a dot-prefixed temp file
+    and rename it into place, so `dst` is never seen partial. An
+    existing `dst` is left as it is."""
+    if os.path.lexists(dst):
+        return
+    try:
+        os.link(src, dst)
+    except OSError:
+        head, name = os.path.split(dst)
+        tmp = os.path.join(head, f".{name}.{os.getpid()}.tmp")
+        try:
+            shutil.copy2(src, tmp)
+            os.replace(tmp, dst)
+        finally:
+            if os.path.lexists(tmp):
+                os.remove(tmp)
 
 
 def discover_new_files(landing_dir: str, file_log: FileLog) -> list[str]:

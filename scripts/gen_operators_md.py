@@ -38,8 +38,8 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
      "append of the unseen names); test_ingest idempotency, tests/test_control.py"),
     ("T1.7", "Keyed UPDATE",
      "`warehouse/control.py::FileLog.record` / `JobLog.end` (event-log + latest-wins + `compact()`); data-plane MERGE INTO: "
-     "`warehouse/versioned.py::VersionedParquetTable.merge_into` / `overwrite_partitions` (copy-on-write versions, atomic pointer flip, "
-     "hard-linked untouched partitions) — tests/test_versioned.py"),
+     "`streaming/sink.py::upsert_latest` (latest-wins merge, append, then delete of the stale files) — "
+     "query `merge_upsert_replay`, tests/test_streaming.py"),
     ("T1.8", "Point-lookup scan", "query `point_lookup`"),
     ("T1.9", "Predicate scan", "queries `filter_predicates`, `case_when_buckets`"),
     ("T1.10", "Chunked CSV scan",

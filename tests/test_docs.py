@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import ast
 import importlib.util
-import re
 from collections import defaultdict
 from pathlib import Path
 
@@ -22,14 +21,20 @@ def test_operators_md_is_the_generated_file():
     assert gen.render() == (ROOT / "OPERATORS.md").read_text()
 
 
+#: Kept without a non-test caller: `cdc_chunks` is the reference that
+#: the `cdc_chunks_arrow` equivalence tests compare against.
+REFERENCE_ONLY = {"operators/text.py::cdc_chunks"}
+
+
 def test_every_package_function_has_a_non_test_caller():
-    """Every top-level def/class under the package is named, as a whole
-    word, in the package, `perfbench/`, `scripts/`, `bench.py` or
-    `__spark_entry__.py`, outside its own body. Repeated to a fixed
-    point, so a helper named only by test-only code is caught too.
-    Text only: a catalog query counts as called through its `@query`
-    decorator line. A failure means delete the code, not move it into
-    tests/."""
+    """Every top-level def/class under the package is used, as an
+    `ast.Name` or `ast.Attribute`, in the package, `perfbench/`,
+    `scripts/`, `bench.py` or `__spark_entry__.py`, outside its own
+    body. A docstring, comment, `__all__` string or `__init__.py`
+    re-export is not a use; an f-string expression is. A `@query` def
+    is registered by its decorator. Repeated to a fixed point, so a
+    helper used only by test-only code is caught too. A failure means
+    delete the code, not move it into tests/."""
     callers = [
         *PKG.rglob("*.py"),
         *(ROOT / "perfbench").rglob("*.py"),
@@ -37,16 +42,28 @@ def test_every_package_function_has_a_non_test_caller():
         ROOT / "bench.py",
         ROOT / "__spark_entry__.py",
     ]
-    mentions = defaultdict(list)  # word -> [(file, line number)]
-    for path in callers:
-        for lineno, line in enumerate(path.read_text().splitlines(), start=1):
-            for word in re.findall(r"\w+", line):
-                mentions[word].append((path, lineno))
+    trees = {path: ast.parse(path.read_text()) for path in callers}
+    uses = defaultdict(list)  # name -> [(file, line number)]
+    for path, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                uses[node.id].append((path, node.lineno))
+            elif isinstance(node, ast.Attribute):
+                uses[node.attr].append((path, node.lineno))
+
+    def registered(node):
+        return any(
+            isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
+            for d in getattr(node, "decorator_list", [])
+        )
+
     defs = [
         (node.name, path, node.lineno, node.end_lineno)
         for path in PKG.rglob("*.py")
-        for node in ast.parse(path.read_text()).body
+        for node in trees[path].body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not registered(node)
+        and f"{path.relative_to(PKG).as_posix()}::{node.name}" not in REFERENCE_ONLY
     ]
 
     def inside(path, lineno, spans):
@@ -57,7 +74,7 @@ def test_every_package_function_has_a_non_test_caller():
         new = {
             d for d in defs
             if d not in test_only
-            and all(inside(p, n, test_only | {d}) for p, n in mentions[d[0]])
+            and all(inside(p, n, test_only | {d}) for p, n in uses[d[0]])
         }
         if not new:
             break

@@ -271,35 +271,6 @@ def test_pq_codes_reconstruction_invariants(spark, tmp_path):
     spark.catalog.clearCache()
 
 
-def test_distributed_cumsum_grouped_equals_per_group_serial(spark):
-    """The grouped two-phase scan must equal a per-group serial prefix
-    sum — including groups that straddle range-partition boundaries,
-    single-row groups, and the first group (zero offset)."""
-    from data_warehouse_opensky_spark.operators.prefix import (
-        distributed_cumsum_grouped,
-    )
-
-    rows = [("g%02d" % (i % 5), i, (i * 7) % 53) for i in range(500)]
-    rows.append(("zz", 9999, 13))  # single-row trailing group
-    df = spark.createDataFrame(rows, "grp STRING, uid BIGINT, v BIGINT")
-    out = {
-        (r["grp"], r["uid"]): (r["rt"], r["tot"])
-        for r in distributed_cumsum_grouped(
-            df, ["grp"], ["uid"], "v", out_col="rt",
-            num_partitions=8, total_col="tot",
-        ).collect()
-    }
-    expect = {}
-    acc: dict[str, int] = {}
-    tots: dict[str, int] = {}
-    for grp, uid, v in sorted(rows):
-        acc[grp] = acc.get(grp, 0) + v
-        expect[(grp, uid)] = acc[grp]
-        tots[grp] = tots.get(grp, 0) + v
-    assert out == {k: (rt, tots[k[0]]) for k, rt in expect.items()}
-    spark.catalog.clearCache()
-
-
 def test_distributed_cumsum_small_groups_negative_values(spark):
     """Sign-independence of the fused scan's group-start stat: the
     ADVICE-flagged derivation min(_local - value) only lands on the

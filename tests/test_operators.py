@@ -7,10 +7,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_warehouse_opensky_spark.operators.asof import asof_join, latest_per_key
-from data_warehouse_opensky_spark.operators.dedup import (
-    simhash_blocked_pairs,
-    simhash_pairs,
-)
 from data_warehouse_opensky_spark.operators.similarity import (
     brute_force_topk,
     lsh_bucket_topk,
@@ -74,21 +70,6 @@ def test_latest_per_key(spark):
     )
     out = {r.k: r.payload for r in latest_per_key(df, "k", "t").collect()}
     assert out == {"a": "y", "b": "w"}
-
-
-def test_simhash_blocked_finds_all_close_pairs(spark):
-    """Pigeonhole guarantee: blocked pairs ⊇ plain pairs for
-    hamming ≤ n_blocks − 1."""
-    d = load_table(spark, SF, "documents")
-    plain = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_pairs(d, max_hamming=3).collect()
-    }
-    blocked = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_blocked_pairs(d, max_hamming=3, n_blocks=4).collect()
-    }
-    assert blocked == plain
 
 
 def test_lsh_topk_is_subset_of_brute_force_universe(spark):

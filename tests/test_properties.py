@@ -203,46 +203,6 @@ def test_funnel_fold_matches_sequence_reference(spark, events):
     assert got.sum_convert_s == sum_convert
 
 
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=3),   # group
-            st.integers(min_value=-(10**6), max_value=10**6),  # value
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-@settings(max_examples=12, deadline=None)
-def test_grouped_cumsum_matches_serial_reference(spark, rows):
-    """distributed_cumsum_grouped == per-group serial prefix sum for
-    arbitrary group shapes: singleton groups, absent groups, negative
-    values, duplicate values (uid tiebreak keeps the order total)."""
-    from data_warehouse_opensky_spark.operators.prefix import (
-        distributed_cumsum_grouped,
-    )
-
-    data = [(g, i, v) for i, (g, v) in enumerate(rows)]
-    df = spark.createDataFrame(data, "grp BIGINT, uid BIGINT, v BIGINT")
-    out = {
-        (r["grp"], r["uid"]): (r["rt"], r["tot"])
-        for r in distributed_cumsum_grouped(
-            df, ["grp"], ["uid"], "v", out_col="rt",
-            num_partitions=4, total_col="tot",
-        ).collect()
-    }
-    acc: dict[int, int] = {}
-    tot: dict[int, int] = {}
-    for g, _, v in sorted(data):
-        tot[g] = tot.get(g, 0) + v
-    expect = {}
-    for g, uid, v in sorted(data):
-        acc[g] = acc.get(g, 0) + v
-        expect[(g, uid)] = (acc[g], tot[g])
-    assert out == expect
-    spark.catalog.clearCache()
-
-
 def test_bpe_merges_invariant_to_partitioning(spark):
     """BPE training is a sequence of exact-integer argmaxes with a
     total tie-break, so the learned merge table must be IDENTICAL

@@ -1,8 +1,10 @@
-"""Structured Streaming ingest (T2.16): availableNow-bounded runs.
+"""Structured Streaming (T2.16): availableNow-bounded runs.
 
-The batch/streaming symmetry is the oracle: the same windowed-agg
-function runs on the streamed silver output and on a batch read of
-the landing zone, and must agree."""
+The landing-to-silver stream is exactly-once per file and writes the
+rows and layout that cron staging writes. The keyed upsert sink
+(`streaming/sink.py`) converges on replay after a failure at any step.
+The stateful, join and watermark operators behind the catalog's
+streaming queries keep and evict state as their batch twins say."""
 
 from __future__ import annotations
 
@@ -12,13 +14,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from data_warehouse_opensky_spark.schemas import RAW_SCHEMA
-from data_warehouse_opensky_spark.streaming import (
-    session_window_stats,
-    stream_clean_to_silver,
-    windowed_country_counts,
-)
-from data_warehouse_opensky_spark.transform import clean_state_vectors
+from data_warehouse_opensky_spark.streaming import stream_clean_to_silver
 
 HEADER = (
     "icao24,callsign,origin_country,time_position,last_contact,longitude,"
@@ -43,7 +39,7 @@ def landing(tmp_path):
     ])
     _write_crawl(d, "states_j_20251113_091000.csv", [
         ("a1", "CS1     ", "Germany", t0 + 600, t0 + 600, 1.1, 2.1, 120.0, "false", 12.0, 0.0, 0.0, None, 130.0, "1000", "false", 0),
-        # late event: 35 min older than the newest (inside 1h watermark)
+        # late event: 35 min older than the newest
         ("c3", "CS3     ", "Germany", t0 - 2100, t0 - 2100, 1.2, 2.2, 300.0, "true", 0.0, 0.0, 0.0, None, None, "0622", "false", 0),
     ])
     # a non-matching file the glob filter must skip (T1.4 semantics)
@@ -96,40 +92,6 @@ def test_stream_silver_keeps_exact_names_and_event_date_partitions(spark, tmp_pa
     assert [d for d in os.listdir(silver) if d.startswith("event_date=")] == [
         "event_date=2023-11-14"
     ]
-
-
-def test_windowed_counts_stream_equals_batch(spark, landing, tmp_path):
-    silver = str(tmp_path / "silver")
-    q = stream_clean_to_silver(spark, str(landing), silver, str(tmp_path / "ck"))
-    q.awaitTermination(120)
-
-    batch_clean = clean_state_vectors(
-        spark.read.csv(f"{landing}/states_*.csv", header=True, schema=RAW_SCHEMA)
-    )
-    expect = {
-        (r.window_start, r.origin_country): (r.n_states, r.avg_velocity)
-        for r in windowed_country_counts(batch_clean).collect()
-    }
-    got = {
-        (r.window_start, r.origin_country): (r.n_states, r.avg_velocity)
-        for r in windowed_country_counts(spark.read.parquet(silver)).collect()
-    }
-    assert got == expect
-    assert len(got) >= 2
-
-
-def test_session_windows(spark, landing):
-    clean = clean_state_vectors(
-        spark.read.csv(f"{landing}/states_*.csv", header=True, schema=RAW_SCHEMA)
-    )
-    sessions = session_window_stats(clean, gap="30 minutes").collect()
-    by_ac = {}
-    for r in sessions:
-        by_ac.setdefault(r.icao24, []).append(r)
-    # a1 pinged at t0 and t0+600 (10 min apart) → ONE session of 2 pings
-    assert len(by_ac["a1"]) == 1 and by_ac["a1"][0].n_pings == 2
-    # c3's lone early ping is its own session
-    assert len(by_ac["c3"]) == 1 and by_ac["c3"][0].n_pings == 1
 
 
 def test_session_window_gap_boundary_merges(spark):
